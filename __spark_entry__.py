@@ -2591,14 +2591,14 @@ def q_traj_resample(spark, sf):
 
 def q_graph_components(spark, sf):
     """N4 (r4 cont.) — connected components over a generic edge table
-    (engine/text/dedup.py::connected_components, the min-label +
+    (engine/graph.py::connected_components, the min-label +
     pointer-jumping engine behind dedup_clusters, surfaced as a graph
     operator): O(log diameter) rounds of two skinny (id, label)
     shuffles each.  Fixture = the triangle-count key's deterministic
     512-node hashed graph; the twin is the recursive-CTE reachability
     closure + MIN."""
     _prep(spark)
-    from engine.text.dedup import connected_components
+    from engine.graph import connected_components
     ed = _t(spark, sf, "customer").selectExpr(
         "(c_custkey * 2654435761) % 512 AS id_a",
         "((c_custkey * 40503 + 7) DIV 512) % 512 AS id_b")
@@ -3587,7 +3587,7 @@ def q_raster_polygonize_global(spark, sf):
     regions merge into GLOBAL regions wherever occupied pixels are
     4-adjacent across a shared tile edge — the boundary-pixel equi-join
     feeds the same min-label propagation dedup_clusters drives
-    (engine/text/dedup.py::connected_components), so the driver checks
+    (engine/graph.py::connected_components), so the driver checks
     the full composite: batched per-tile union-find, edge build, AND the
     iterative CC.  The twin runs TWO recursive CTEs in exact integer
     domain: per-tile components (the raster_polygonize oracle), then

@@ -15,7 +15,7 @@ from engine.geo.bbox import bbox_filter
 from engine.geo.cells import cell_parent_col, with_cell
 from engine.geo.join import candidates_join
 from engine.geo.layer import PolygonLayer
-from engine.geo.pip import refine, refine_native
+from engine.geo.pip import refine_native
 from engine.geo.skew import heavy_hitters
 from engine.geo.tiles import with_tile
 from engine.pipeline import Stage
@@ -29,8 +29,7 @@ def flagship_stages(layer: PolygonLayer, n_images: int, *, seed: int = 42,
                     bbox: tuple[float, float, float, float] = DEFAULT_BBOX,
                     level: int = 8, z: int = 12, parts: int | None = None,
                     salt: int = 8, hot_top: int = 4,
-                    mode: str = "auto",
-                    refine_mode: str = "native") -> list[Stage]:
+                    mode: str = "auto") -> list[Stage]:
     """Checkpointed stage list for the flagship pipeline.
 
     Column discipline: the spatial join and tiling run on NARROW columns
@@ -49,13 +48,10 @@ def flagship_stages(layer: PolygonLayer, n_images: int, *, seed: int = 42,
         probe = prev.withColumn("cell_p", cell_parent_col("cell", level))
         hot = heavy_hitters(probe, "cell_p", top=hot_top,
                             min_rows=max(64, n_images // 50))
-        build = layer.build_df(spark, level,
-                               with_edges=(refine_mode == "native"))
+        build = layer.build_df(spark, level, with_edges=True)
         cands = candidates_join(probe, build, mode=mode, hot_keys=hot,
                                 salt=salt, build_rows=build.count())
-        if refine_mode == "native":
-            return refine_native(cands)
-        return refine(cands, layer.parts())
+        return refine_native(cands)
 
     def s_tiled(spark: SparkSession, prev: DataFrame) -> DataFrame:
         return with_tile(prev, z=z, quadkey_col=True)

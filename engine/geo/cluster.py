@@ -18,7 +18,8 @@ cells + adjacency) is an exact oracle, the same strategy that verified
 Scale shape: ONE full-table map-side-combined hash agg (the quantize +
 count), then everything downstream touches only aggregated cells
 (<= 4^g rows): an explode-9 equi-join for adjacency and O(diameter)
-skinny (id,label) rounds inside connected_components.  No range join,
+skinny (id,label) rounds inside engine/graph.py::connected_components
+(or one bounded collect when the adjacency fits the driver).  No range join,
 no crossJoin, no Python.
 """
 
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 from oracle.geo import LEVEL
 
 from .cells import merc_xy_sql
-from engine.text.dedup import connected_components
+from engine.graph import connected_components
 
 
 def grid_cells(df: DataFrame, grid_bits: int = 5, lat: str = "lat",

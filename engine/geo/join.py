@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .cells import cell_parent_col, with_cell
 from .layer import PolygonLayer
-from .pip import refine, refine_arrow, refine_native, refine_scalar
+from .pip import refine, refine_native
 from .skew import salted_equijoin
 
 BROADCAST_MAX_BUILD_ROWS = 2_000_000  # ~2M (cell_p, poly_id) rows ≈ 50 MB
@@ -139,12 +139,6 @@ def spatial_join(
         )
     if refine_mode == "native":
         return refine_native(cands, lon_col=lon_col, lat_col=lat_col)
-    if refine_mode == "scalar":
-        return refine_scalar(cands, layer.parts(), lon_col=lon_col,
-                             lat_col=lat_col)
-    if refine_mode == "arrow":
-        return refine_arrow(cands, layer.parts(), lon_col=lon_col,
-                            lat_col=lat_col)
     return refine(cands, layer.parts(), lon_col=lon_col, lat_col=lat_col)
 
 

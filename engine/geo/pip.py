@@ -64,8 +64,7 @@ def pip_parts_np(px: np.ndarray, py: np.ndarray,
 
 def refine(candidates: DataFrame, parts_by_poly: dict, *,
            lon_col: str = "lon", lat_col: str = "lat",
-           poly_col: str = "poly_id", full_col: str = "full",
-           split_full: bool = False) -> DataFrame:
+           poly_col: str = "poly_id", full_col: str = "full") -> DataFrame:
     """Filter candidate (image x polygon) rows to exact containment.
 
     `parts_by_poly`: {poly_id: [(ring ndarray, [hole ndarrays]), ...]} —
@@ -73,14 +72,8 @@ def refine(candidates: DataFrame, parts_by_poly: dict, *,
     `full_col == True` bypass the exact test (their covering cell is
     interior).  Output drops `full_col`, keeps everything else.
 
-    `split_full`: full-cell candidates are split off with a native
-    filter and UNIONed around the Python stage — the Arrow boundary then
-    carries only boundary-cell rows, but BOTH branches re-execute the
-    upstream plan.  Use it when candidates are already materialized
-    (the checkpointed pipeline reads the committed `joined` stage, so
-    the double read is two cheap pruned parquet scans); leave it off in
-    fused one-pass queries, where measurements show the duplicated
-    upstream costs more than shipping all candidates through Arrow.
+    This numpy ray cast is the reference that refine_native is tested
+    against (tests/test_pip_native.py).
     """
     spark = candidates.sparkSession
     bc = spark.sparkContext.broadcast(parts_by_poly)
@@ -104,100 +97,7 @@ def refine(candidates: DataFrame, parts_by_poly: dict, *,
                     keep[pos] = pip_parts_np(px[pos], py[pos], polys[pid])
             yield pdf.loc[keep, out_cols]
 
-    if not split_full:
-        return candidates.mapInPandas(_refine, schema=out_schema)
-    interior = candidates.filter(F.col(full_col)).select(*out_cols)
-    boundary = candidates.filter(~F.col(full_col))
-    return interior.unionByName(boundary.mapInPandas(_refine, schema=out_schema))
-
-
-# --------------------------------------------------- arrow-batch refine
-
-def refine_arrow(candidates: DataFrame, parts_by_poly: dict, *,
-                 lon_col: str = "lon", lat_col: str = "lat",
-                 poly_col: str = "poly_id", full_col: str = "full") -> DataFrame:
-    """D3, mapInArrow form: the exact same ray-cast kernel, but batches
-    stay pyarrow RecordBatches end to end — lon/lat reach numpy via
-    zero-copy buffers, per-polygon row selection and the final row
-    filter run in Arrow C++ (`pyarrow.compute`), and pass-through
-    columns (string ids, payload refs) are never materialized as Python
-    objects.  ~2x less Python-side CPU than the pandas form on wide
-    candidate rows; identical verdicts.
-    """
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    spark = candidates.sparkSession
-    bc = spark.sparkContext.broadcast(parts_by_poly)
-    out_fields = [f for f in candidates.schema.fields if f.name != full_col]
-    out_schema = type(candidates.schema)(out_fields)
-    out_cols = [f.name for f in out_fields]
-
-    def _refine(batches):
-        polys = bc.value
-        for b in batches:
-            if b.num_rows == 0:
-                continue
-            keep = b.column(full_col).to_numpy(zero_copy_only=False).astype(bool)
-            todo = ~keep
-            if todo.any():
-                px = b.column(lon_col).to_numpy(zero_copy_only=False)
-                py = b.column(lat_col).to_numpy(zero_copy_only=False)
-                pcol = b.column(poly_col)
-                for pid in pc.unique(pcol.filter(pa.array(todo))).to_pylist():
-                    sel = todo & pc.equal(pcol, pid).to_numpy(zero_copy_only=False)
-                    keep[sel] = pip_parts_np(px[sel], py[sel], polys[pid])
-            out = b.filter(pa.array(keep))
-            yield out.select(out_cols)
-
-    return candidates.mapInArrow(_refine, schema=out_schema)
-
-
-# ------------------------------------------------- scalar-verdict refine
-
-def refine_scalar(candidates: DataFrame, parts_by_poly: dict, *,
-                  lon_col: str = "lon", lat_col: str = "lat",
-                  poly_col: str = "poly_id", full_col: str = "full") -> DataFrame:
-    """D3, minimum-Arrow-traffic form: a scalar pandas UDF computes the
-    containment verdict from (lon, lat, poly_idx, full) — 21 bytes/row
-    to Python and 1 byte back — and a native filter applies it.  The id
-    / cell / payload columns never cross the Arrow boundary (vs
-    `refine`'s mapInPandas, which round-trips every output column).
-
-    The polygon id is dictionary-encoded to a small int against the
-    driver-side layer (fine for O(10^4) polygons; beyond that, put the
-    index on the build side of the join instead).
-    """
-    spark = candidates.sparkSession
-    pids = sorted(parts_by_poly)
-    parts_list = [parts_by_poly[p] for p in pids]
-    bc = spark.sparkContext.broadcast(parts_list)
-    mapping = F.create_map(
-        *[x for i, p in enumerate(pids) for x in (F.lit(p), F.lit(i))])
-
-    @F.pandas_udf("boolean")
-    def _inside(lon: pd.Series, lat: pd.Series, pidx: pd.Series,
-                full: pd.Series) -> pd.Series:
-        polys = bc.value
-        out = full.to_numpy(bool).copy()
-        todo = ~out
-        if todo.any():
-            px = lon.to_numpy(np.float64)
-            py = lat.to_numpy(np.float64)
-            pi = pidx.to_numpy(np.int64)
-            for i in np.unique(pi[todo]):
-                sel = todo & (pi == i)
-                out[sel] = pip_parts_np(px[sel], py[sel], polys[i])
-        return pd.Series(out)
-
-    out_cols = [c for c in candidates.columns if c != full_col]
-    return (
-        candidates
-        .withColumn("_pidx", mapping[F.col(poly_col)])
-        .filter(_inside(F.col(lon_col), F.col(lat_col), F.col("_pidx"),
-                        F.col(full_col)))
-        .select(*out_cols)
-    )
+    return candidates.mapInPandas(_refine, schema=out_schema)
 
 
 # ------------------------------------------------------- native refine

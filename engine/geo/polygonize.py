@@ -21,7 +21,7 @@ Scale shape:
   rasterize_tile_grids (engine/geo/raster.py docstring).
 - Cross-tile stitching (polygonize_global) is the SAME iterative
   min-label propagation as duplicate clustering
-  (engine/text/dedup.py::connected_components): per-tile regions that
+  (engine/graph.py::connected_components): per-tile regions that
   touch a shared tile edge with 4-adjacent boundary pixels become graph
   edges; only O(boundary) skinny rows shuffle, converging in
   O(region diameter in tiles) rounds.
@@ -401,10 +401,10 @@ def polygonize_global(pixels: DataFrame, grid_bits: int = 4,
     BOUNDARY edges (pixels on a tile's right/bottom edge joined to the
     neighbor tile's matching left/top pixels — an equi-join on the
     shared-edge key, O(occupied boundary pixels) rows) and then reuses
-    the min-label propagation from engine/text/dedup.py (skinny
+    the min-label propagation from engine/graph.py (skinny
     (long, long) shuffles, O(diameter-in-tiles) rounds).  `z` wraps
     tile_x cyclically at the antimeridian when given."""
-    from engine.text.dedup import connected_components
+    from engine.graph import connected_components
 
     # Key-packing domain guards (r4 ADVICE): rkey packs
     # (tile_x, tile_y, region_id) with fixed 2^20 factors, so region ids

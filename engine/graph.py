@@ -1,5 +1,7 @@
-"""Graph analytics in the exact integer domain (r4 cont.) — the
-iterative family beside connected components (engine/text/dedup.py):
+"""Graph analytics in the exact integer domain — connected components
+(`connected_components`, the one CC engine that dedup_clusters,
+grid-density clustering, the polygonize stitch and msf_boruvka share)
+and the iterative family beside it:
 
 * `pagerank_int` — damped PageRank with FIXED-POINT integer mass.
   Every step is integer floor arithmetic (contribution = rank DIV
@@ -30,11 +32,16 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructField, StructType
 
 from engine.ckpt import materialize
 
 S0_DEFAULT = 1 << 30
 DAMP_NUM, DAMP_DEN = 85, 100
+# connected_components: pair count up to which the components finish on
+# the driver (one bounded collect), and the distributed round cap
+_SMALL_CC_ROWS = 2_000_000
+_CC_MAX_ROUNDS = 25
 
 
 def _undirect(edges: DataFrame, src: str, dst: str) -> DataFrame:
@@ -444,8 +451,8 @@ def lpa_py(edge_list, rounds: int = 3) -> dict:
 
 def _minlabel_unionfind(pairs) -> dict:
     """Driver-side union-find with min-reachable-id labels — the
-    small-side contraction path of msf_boruvka (same fixpoint as
-    engine/text/dedup.py::connected_components)."""
+    bounded-collect finish of connected_components (same fixpoint as
+    its distributed rounds)."""
     parent: dict = {}
 
     def find(x):
@@ -465,9 +472,76 @@ def _minlabel_unionfind(pairs) -> dict:
     return {x: roots[find(x)] for x in parent}
 
 
+def connected_components(pairs: DataFrame, id_a: str = "id_a",
+                         id_b: str = "id_b",
+                         checkpoint_dir: str | None = None) -> DataFrame:
+    """Connected components over a pair list -> (id, cluster_id) with
+    cluster_id = min reachable id; `id` keeps the input column's type.
+
+    The symmetrized distinct edge frame is materialized once.  When it
+    holds at most `_SMALL_CC_ROWS` undirected pairs, the components are
+    finished on the driver: one bounded collect, a union-find
+    (`_minlabel_unionfind`), and a broadcast (id, cluster_id) frame —
+    no per-round job latency.  Larger graphs run distributed min-label
+    propagation PLUS pointer jumping (label <- min(label,
+    label-of-label), the hash-to-min move): each round is two skinny
+    (id, label) shuffle joins, and the jump step doubles the
+    propagation horizon, so convergence is O(log diameter) rounds
+    instead of O(diameter).  Labels only decrease and every label is a
+    reachable node id, so both paths reach the same fixpoint (labels
+    constant across edges = component min id).  The per-round
+    convergence check is a driver-side scalar count; each round is
+    materialized (engine/ckpt.py: localCheckpoint, or reliable
+    checkpoint under `checkpoint_dir` for executor-loss-tolerant
+    clusters) so the plan does not grow with iterations."""
+    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+             .unionByName(pairs.select(F.col(id_b).alias("src"),
+                                       F.col(id_a).alias("dst")))
+             .distinct())
+    edges = materialize(edges, eager=True, checkpoint_dir=checkpoint_dir)
+    once = edges.filter(F.col("src") <= F.col("dst"))
+    if once.count() <= _SMALL_CC_ROWS:
+        labels = _minlabel_unionfind(once.collect())
+        id_type = edges.schema["src"].dataType
+        schema = StructType([StructField("id", id_type),
+                             StructField("cluster_id", id_type)])
+        return F.broadcast(edges.sparkSession.createDataFrame(
+            list(labels.items()), schema))
+    labels = materialize(
+        edges.select(F.col("src").alias("id")).distinct()
+             .withColumn("label", F.col("id")),
+        eager=True, checkpoint_dir=checkpoint_dir)
+    for _ in range(_CC_MAX_ROUNDS):
+        nbr = (edges.join(labels, edges.dst == labels.id)
+               .groupBy("src").agg(F.min("label").alias("nbr_label")))
+        stepped = (labels.join(nbr, labels.id == nbr.src, "left")
+                   .select(labels.id, F.col("label").alias("old_label"),
+                           F.least("label", "nbr_label").alias("label")))
+        # pointer jumping: follow one hop through the label table so a
+        # min label crosses 2^k edges after k rounds, not k
+        par = stepped.select(F.col("id").alias("pid"),
+                             F.col("label").alias("plabel"))
+        # the change flag rides the checkpointed frame, so convergence
+        # detection is a metadata-cheap count over materialized rows, not
+        # a second old-vs-new join that recomputes the round
+        new_labels = (stepped.join(par, stepped.label == par.pid, "left")
+                      .select(stepped.id,
+                              F.least(stepped.label, par.plabel)
+                              .alias("label"),
+                              (F.least(stepped.label, par.plabel)
+                               < F.col("old_label")).alias("chg")))
+        new_labels = materialize(new_labels, eager=True,
+                                 checkpoint_dir=checkpoint_dir)
+        changed = new_labels.filter("chg").count()
+        labels = new_labels.select("id", "label")
+        if changed == 0:
+            return labels.select("id", F.col("label").alias("cluster_id"))
+    raise RuntimeError(
+        f"connected_components: no convergence in {_CC_MAX_ROUNDS} rounds")
+
+
 def msf_boruvka(edges: DataFrame, src: str = "u", dst: str = "v",
                 w: str = "w", max_rounds: int = 24,
-                small_cc_threshold: int = 2_000_000,
                 checkpoint_dir: str | None = None) -> DataFrame:
     """Minimum spanning forest via distributed Borůvka -> the MSF edge
     relation (u, v, w) with u < v.
@@ -484,17 +558,18 @@ def msf_boruvka(edges: DataFrame, src: str = "u", dst: str = "v",
     Scale shape: each round is (a) two partitioned hash joins tagging
     edge endpoints with component labels, (b) ONE map-side-combined
     min(struct(w, u, v, other)) agg per component — the only wide
-    shuffle over the edge frame, (c) connected components over the
-    CHOSEN edge pairs only (one skinny row per surviving component,
-    O(log) pointer-jumping rounds — engine/text/dedup.py), and (d) a
-    broadcast-sized relabel join.  Active components at least halve
-    per round, so rounds <= ceil(log2 V); the edge frame itself is
-    re-filtered to inter-component edges each round and SHRINKS as
-    components merge.  Round state is materialized via engine/ckpt.py
-    (localCheckpoint, or reliable checkpoint under `checkpoint_dir`).
+    shuffle over the edge frame, (c) connected_components over the
+    CHOSEN edge pairs only (at most one pair per surviving component,
+    so it usually takes the bounded-collect union-find finish), and (d)
+    a relabel join.  Active components at least halve per round, so
+    rounds <= ceil(log2 V).  The edge frame `e` is materialized once
+    and rescanned every round — it does not shrink; the label joins
+    drop the intra-component edges on the fly.  Round state is
+    materialized via engine/ckpt.py (localCheckpoint, or reliable
+    checkpoint under `checkpoint_dir`).  The round after the last merge
+    chooses nothing; that probe runs even after `max_rounds` merging
+    rounds, so a forest completed in exactly `max_rounds` is returned.
     """
-    from engine.text.dedup import connected_components
-
     e = (edges.select(F.least(F.col(src), F.col(dst)).cast("long").alias("u"),
                       F.greatest(F.col(src), F.col(dst)).cast("long").alias("v"),
                       F.col(w).cast("long").alias("w"))
@@ -506,7 +581,7 @@ def msf_boruvka(edges: DataFrame, src: str = "u", dst: str = "v",
          .withColumn("comp", F.col("node")),
         eager=True, checkpoint_dir=checkpoint_dir)
     msf = None
-    for _ in range(max_rounds):
+    for rnd in range(max_rounds + 1):
         cu = comp.select(F.col("node").alias("u"), F.col("comp").alias("cu"))
         cv = comp.select(F.col("node").alias("v"), F.col("comp").alias("cv"))
         live = (e.join(cu, "u").join(cv, "v")
@@ -522,41 +597,22 @@ def msf_boruvka(edges: DataFrame, src: str = "u", dst: str = "v",
                              checkpoint_dir=checkpoint_dir)
         if chosen.isEmpty():
             break
+        if rnd == max_rounds:
+            raise RuntimeError(
+                f"msf_boruvka: no convergence in {max_rounds} rounds")
         msf = chosen if msf is None else msf.union(chosen)
         msf = materialize(msf, eager=True, checkpoint_dir=checkpoint_dir)
-        # contract: components over the chosen pairs, then relabel.
-        # The merge graph has one row per chosen edge — at most one
-        # per surviving component, a frame that SHRINKS geometrically
-        # — so below `small_cc_threshold` rows the contraction runs as
-        # a driver-side union-find (one bounded collect; identical
-        # min-label fixpoint, pinned by test) instead of ~log rounds
-        # of convergence-probed distributed CC, cutting the dominant
-        # per-round job-synchronization latency.  Above the threshold
-        # (early rounds of planet-scale graphs) the distributed
-        # pointer-jumping engine runs unchanged.
+        # contract: components over the chosen pairs, then relabel
         merge_pairs = (chosen.join(cu, "u").join(cv, "v")
                        .select(F.col("cu").alias("id_a"),
                                F.col("cv").alias("id_b")))
-        merge_pairs = materialize(merge_pairs, eager=True,
-                                  checkpoint_dir=checkpoint_dir)
-        if merge_pairs.count() <= small_cc_threshold:
-            labels = _minlabel_unionfind(
-                (r.id_a, r.id_b) for r in merge_pairs.collect())
-            spark = comp.sparkSession
-            cc = spark.createDataFrame(
-                list(labels.items()), "id long, cluster_id long")
-            cc = F.broadcast(cc)
-        else:
-            cc = connected_components(merge_pairs,
-                                      checkpoint_dir=checkpoint_dir)
+        cc = connected_components(merge_pairs, checkpoint_dir=checkpoint_dir)
         comp = materialize(
             comp.join(cc.select(F.col("id").alias("comp"),
                                 F.col("cluster_id")), "comp", "left")
                 .select("node",
                         F.coalesce("cluster_id", "comp").alias("comp")),
             eager=True, checkpoint_dir=checkpoint_dir)
-    else:
-        raise RuntimeError(f"msf_boruvka: no convergence in {max_rounds} rounds")
     if msf is None:
         return e.select("u", "v", "w").limit(0)
     return msf

@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from engine.ckpt import materialize
+from engine.graph import connected_components
 from pyspark.sql.types import ArrayType, LongType
 
 MERSENNE = (1 << 31) - 1  # minhash modulus: a*v+b stays inside uint64
@@ -330,62 +331,6 @@ def simhash_near_dups(df: DataFrame, *, id_col: str = "doc_id",
 
 
 # --------------------------------------------------- duplicate clusters
-
-def connected_components(pairs: DataFrame, id_a: str = "id_a",
-                         id_b: str = "id_b",
-                         max_iters: int = 25,
-                         checkpoint_dir: str | None = None) -> DataFrame:
-    """Connected components over a pair list -> (id, cluster_id) with
-    cluster_id = min reachable id.  Min-label propagation PLUS pointer
-    jumping (label <- min(label, label-of-label), the hash-to-min move):
-    each round is two skinny (id, label) shuffle joins, and the jump
-    step doubles the propagation horizon, so convergence is O(log
-    diameter) rounds instead of O(diameter) — path-shaped components
-    (grid-density clusters, road chains) converge in ~log2(d) rounds
-    where plain propagation needs d.  Labels only decrease and every
-    label is a reachable node id, so the fixpoint (labels constant
-    across edges = component min id) and determinism are unchanged.
-    The per-round convergence check is a driver-side scalar count, same
-    bounded-loop pattern as engine/geo/knn.py; each round is
-    materialized (engine/ckpt.py: localCheckpoint, or reliable
-    checkpoint under `checkpoint_dir` for executor-loss-tolerant
-    clusters) so the plan does not grow with iterations."""
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .unionByName(pairs.select(F.col(id_b).alias("src"),
-                                       F.col(id_a).alias("dst")))
-             .distinct())
-    edges = materialize(edges, eager=True, checkpoint_dir=checkpoint_dir)
-    labels = materialize(
-        edges.select(F.col("src").alias("id")).distinct()
-             .withColumn("label", F.col("id")),
-        eager=True, checkpoint_dir=checkpoint_dir)
-    for _ in range(max_iters):
-        nbr = (edges.join(labels, edges.dst == labels.id)
-               .groupBy("src").agg(F.min("label").alias("nbr_label")))
-        stepped = (labels.join(nbr, labels.id == nbr.src, "left")
-                   .select(labels.id, F.col("label").alias("old_label"),
-                           F.least("label", "nbr_label").alias("label")))
-        # pointer jumping: follow one hop through the label table so a
-        # min label crosses 2^k edges after k rounds, not k
-        par = stepped.select(F.col("id").alias("pid"),
-                             F.col("label").alias("plabel"))
-        # the change flag rides the checkpointed frame, so convergence
-        # detection is a metadata-cheap count over materialized rows, not
-        # a second old-vs-new join that recomputes the round
-        new_labels = (stepped.join(par, stepped.label == par.pid, "left")
-                      .select(stepped.id,
-                              F.least(stepped.label, par.plabel)
-                              .alias("label"),
-                              (F.least(stepped.label, par.plabel)
-                               < F.col("old_label")).alias("chg")))
-        new_labels = materialize(new_labels, eager=True,
-                                 checkpoint_dir=checkpoint_dir)
-        changed = new_labels.filter("chg").count()
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            return labels.select("id", F.col("label").alias("cluster_id"))
-    raise RuntimeError(f"connected_components: no convergence in {max_iters} rounds")
-
 
 def dedup_clusters(df: DataFrame, *, id_col: str = "doc_id",
                    text_col: str = "text", threshold: float = 0.7,

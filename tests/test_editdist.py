@@ -5,6 +5,8 @@ drift at the +-k boundary, identical strings)."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -27,9 +29,16 @@ def lev(a: str, b: str) -> int:
 
 def brute_pairs(strings: dict[int, str], k: int) -> set[tuple[int, int, int]]:
     ids = sorted(strings)
+    hist = {i: Counter(strings[i]) for i in ids}
     out = set()
     for i, a in enumerate(ids):
         for b in ids[i + 1:]:
+            # one edit moves the character histogram by at most 2 in L1,
+            # so a pair whose histograms differ by more than 2k is > k
+            # apart; only the rest needs the DP
+            ha, hb = hist[a], hist[b]
+            if sum(((ha - hb) + (hb - ha)).values()) > 2 * k:
+                continue
             d = lev(strings[a], strings[b])
             if d <= k:
                 out.add((a, b, d))

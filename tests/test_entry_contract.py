@@ -12,7 +12,10 @@ import pytest
 import __spark_entry__ as entry_mod
 from tools.check_contract import rowset
 
-ORACLED = sorted(entry_mod.oracle_sql().keys())
+# oracle_sql() builds its twins afresh on every call (about 1.5 s: some
+# embed locally generated fixture rows), so the module builds them once
+ORACLE_SQL = entry_mod.oracle_sql()
+ORACLED = sorted(ORACLE_SQL.keys())
 ROWS_ONLY = sorted(set(entry_mod.queries()) - set(ORACLED))
 
 # Keys whose oracle is a golden/pinned table generated at the driver's
@@ -56,7 +59,7 @@ def test_oracle_parity(key, spark, sf_dir, duck):
     df = entry_mod.queries()[key](spark, sf_dir)
     cols = df.columns
     rows = [tuple(r) for r in df.collect()]
-    res = duck.execute(entry_mod.oracle_sql()[key])
+    res = duck.execute(ORACLE_SQL[key])
     dcols = [d[0] for d in res.description]
     drows = res.fetchall()
     assert sorted(cols) == sorted(dcols), f"{key}: column names differ"

@@ -493,15 +493,61 @@ def test_toposort_detects_cycle(spark):
         toposort_layers(_edf(spark, edges).toDF("u", "v"), max_depth=10)
 
 
-def test_msf_small_and_distributed_contraction_agree(spark):
+def test_msf_small_and_distributed_contraction_agree(spark, monkeypatch):
     """The bounded-collect union-find contraction and the distributed
     pointer-jumping CC produce the identical forest (same min-label
     fixpoint) — forcing the distributed path via threshold 0."""
-    from engine.graph import msf_boruvka
+    import engine.graph as graph
     rng = random.Random(77)
     edges = [(rng.randrange(40), rng.randrange(40), rng.randrange(12))
              for _ in range(90)]
-    fast = sorted(map(tuple, msf_boruvka(_wedf(spark, edges)).collect()))
-    dist = sorted(map(tuple, msf_boruvka(
-        _wedf(spark, edges), small_cc_threshold=0).collect()))
+    fast = sorted(map(tuple, graph.msf_boruvka(_wedf(spark, edges)).collect()))
+    monkeypatch.setattr(graph, "_SMALL_CC_ROWS", 0)
+    dist = sorted(map(tuple, graph.msf_boruvka(_wedf(spark, edges)).collect()))
     assert fast == dist
+
+
+def test_msf_completes_in_exactly_max_rounds(spark):
+    """One edge merges everything in round 1; the probe that finds no
+    further edge must still run, so max_rounds=1 returns the forest."""
+    from engine.graph import msf_boruvka
+    got = msf_boruvka(_wedf(spark, [(1, 2, 5)]), max_rounds=1).collect()
+    assert sorted(map(tuple, got)) == [(1, 2, 5)]
+
+
+@pytest.mark.parametrize("small", [True, False],
+                         ids=["small", "distributed"])
+def test_connected_components_string_ids_keep_type(spark, monkeypatch,
+                                                   small):
+    """Both CC paths return `id`/`cluster_id` in the input's type; the
+    small path materializes its edge frame once and runs no round."""
+    import engine.graph as graph
+    pairs = spark.createDataFrame(
+        [("b", "c"), ("c", "d"), ("x", "y"), ("a", "d")],
+        "id_a string, id_b string")
+    calls = []
+    orig = graph.materialize
+    monkeypatch.setattr(graph, "materialize",
+                        lambda *a, **kw: calls.append(1) or orig(*a, **kw))
+    if not small:
+        monkeypatch.setattr(graph, "_SMALL_CC_ROWS", 0)
+    cc = graph.connected_components(pairs)
+    assert cc.dtypes == [("id", "string"), ("cluster_id", "string")]
+    assert {(r.id, r.cluster_id) for r in cc.collect()} == {
+        ("a", "a"), ("b", "a"), ("c", "a"), ("d", "a"),
+        ("x", "x"), ("y", "x")}
+    assert (len(calls) == 1) == small
+
+
+@pytest.mark.parametrize("small", [True, False],
+                         ids=["small", "distributed"])
+def test_connected_components_empty_pairs(spark, monkeypatch, small):
+    """No pairs -> no components, in the input's id type, on both paths
+    (the distributed rounds converge at once on an empty label frame)."""
+    import engine.graph as graph
+    if not small:
+        monkeypatch.setattr(graph, "_SMALL_CC_ROWS", -1)
+    pairs = spark.createDataFrame([], "id_a long, id_b long")
+    cc = graph.connected_components(pairs)
+    assert cc.dtypes == [("id", "bigint"), ("cluster_id", "bigint")]
+    assert cc.collect() == []

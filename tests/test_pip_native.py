@@ -32,7 +32,7 @@ def _pairs(df):
 
 
 @pytest.mark.parametrize("level", [6, 12])
-@pytest.mark.parametrize("mode", ["native", "arrow", "scalar"])
+@pytest.mark.parametrize("mode", ["native"])
 def test_refine_modes_match_pandas(spark, imgs, layer, level, mode):
     a = _pairs(spatial_join(imgs, layer, level=level, refine_mode=mode))
     b = _pairs(spatial_join(imgs, layer, level=level, refine_mode="pandas"))

@@ -16,7 +16,8 @@ from engine.geo.dist import bearing_np, crosstrack_np, haversine_np
 from engine.geo.hexbin import hexbin_counts, hexbin_rollup
 from engine.geo.raster import kde_tiles
 from engine.geo.tiles import adaptive_quadtree
-from engine.text.dedup import connected_components
+import engine.graph as graph
+from engine.graph import connected_components
 from oracle.geo import LEVEL, lonlat_to_xy
 
 
@@ -134,15 +135,18 @@ def test_grid_density_matches_bfs_oracle(spark, rng):
     assert got == want
 
 
-def test_connected_components_long_path_converges(spark):
+def test_connected_components_long_path_converges(spark, monkeypatch):
     """Pointer jumping makes a 200-node path converge well inside the
     25-round cap (plain min-propagation needs ~200 rounds — this is the
-    regression test for the O(log d) upgrade)."""
+    regression test for the O(log d) upgrade).  Run on the bounded-collect
+    finish and, with its threshold at 0, on the distributed rounds."""
     pairs = spark.createDataFrame(
         pd.DataFrame({"id_a": np.arange(199), "id_b": np.arange(1, 200)}))
-    got = connected_components(pairs).collect()
-    assert len(got) == 200
-    assert all(r.cluster_id == 0 for r in got)
+    for small_rows in (graph._SMALL_CC_ROWS, 0):
+        monkeypatch.setattr(graph, "_SMALL_CC_ROWS", small_rows)
+        got = connected_components(pairs).collect()
+        assert len(got) == 200, small_rows
+        assert all(r.cluster_id == 0 for r in got), small_rows
 
 
 # ------------------------------------------------------- cross-track

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 import engine.ckpt as ckpt
 from engine.ckpt import materialize
-from engine.graph import kcore, pagerank_int, sssp_int
-from engine.text.dedup import connected_components
+import engine.graph as graph
+from engine.graph import connected_components, kcore, pagerank_int, sssp_int
 
 _DIR = "/tmp/engine_test_reliable_ckpt"
 
@@ -59,19 +59,23 @@ def test_materialize_rejects_second_dir(spark, ckpt_dir):
         materialize(spark.range(1), checkpoint_dir=ckpt_dir + "-other")
 
 
-def test_connected_components_reliable_matches_default(spark, ckpt_dir):
-    # two path components + a singleton edge: exercises >1 round
+def test_connected_components_reliable_matches_default(spark, ckpt_dir,
+                                                       monkeypatch):
+    # two path components + a singleton edge: exercises >1 round on the
+    # distributed path (threshold 0) as well as the bounded-collect finish
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (20, 21)],
         "id_a long, id_b long")
-    base = {(r.id, r.cluster_id)
-            for r in connected_components(pairs).collect()}
-    rel = {(r.id, r.cluster_id)
-           for r in connected_components(
-               pairs, checkpoint_dir=ckpt_dir).collect()}
-    assert rel == base
-    assert rel == {(1, 1), (2, 1), (3, 1), (4, 1),
-                   (10, 10), (11, 10), (12, 10), (20, 20), (21, 20)}
+    for small_rows in (graph._SMALL_CC_ROWS, 0):
+        monkeypatch.setattr(graph, "_SMALL_CC_ROWS", small_rows)
+        base = {(r.id, r.cluster_id)
+                for r in connected_components(pairs).collect()}
+        rel = {(r.id, r.cluster_id)
+               for r in connected_components(
+                   pairs, checkpoint_dir=ckpt_dir).collect()}
+        assert rel == base, small_rows
+        assert rel == {(1, 1), (2, 1), (3, 1), (4, 1),
+                       (10, 10), (11, 10), (12, 10), (20, 20), (21, 20)}
 
 
 def test_graph_ops_reliable_match_default(spark, ckpt_dir):

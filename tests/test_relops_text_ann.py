@@ -7,6 +7,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import engine.graph as graph
 from engine.ml.ann import cosine_near_dup_pairs, cosine_topk, lsh_topk
 from engine.relops import asof_join
 from engine.text import dedup as dd
@@ -187,15 +188,19 @@ def test_cosine_near_dup_exact_vs_lsh(spark):
     assert len(approx & {(i, i + 20) for i in range(5)}) >= 3
 
 
-def test_connected_components_min_label(spark):
+def test_connected_components_min_label(spark, monkeypatch):
     """CC over a known graph: chain 1-2-3-4 plus pair (10,11) plus the
     chain's bridge to 0 — every node must land on the min reachable id,
-    exercising multi-hop propagation (diameter 4)."""
+    exercising multi-hop propagation (diameter 4), on the bounded-collect
+    finish and on the distributed rounds."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (0, 4)], "id_a long, id_b long")
-    got = {r.id: r.cluster_id for r in
-           dd.connected_components(pairs).collect()}
-    assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10}
+    for small_rows in (graph._SMALL_CC_ROWS, 0):
+        monkeypatch.setattr(graph, "_SMALL_CC_ROWS", small_rows)
+        got = {r.id: r.cluster_id for r in
+               graph.connected_components(pairs).collect()}
+        assert got == {0: 0, 1: 0, 2: 0, 3: 0, 4: 0, 10: 10, 11: 10}, \
+            small_rows
 
 
 def test_dedup_clusters_keep_one_per_cluster(spark):

@@ -88,7 +88,8 @@ def main() -> None:
         "a native even-odd HOF filter — ZERO Python stages anywhere in the "
         "flagship (r2: the HOF form measured 2.2-2.5x faster than the "
         "Arrow/pandas ray cast at 512M rows and scales 0.867 N->4N; the "
-        "pandas form remains as refine_mode='pandas'). The per-tile "
+        "pandas ray cast remains as refine_mode='pandas', the reference "
+        "the native form is tested against). The per-tile "
         "aggregation shuffles only refined rows with map-side partial "
         "aggregation; the tile key is a native shiftright of the cell id.",
         plan_of(counts)))
