@@ -22,7 +22,11 @@ a short exclusive lockfile, so concurrent writers serialize on metadata
 only and no commit's file list is lost to a stale-parent race
 (tests/test_icelite.py::test_concurrent_appends_all_survive).  The
 os.replace stays the single atomic serialization point, exactly the
-role of Iceberg's catalog pointer.  Readers resolve a snapshot to its
+role of Iceberg's catalog pointer.  Bookkeeping tables whose rows are
+few and already on the driver (the pipeline's `_metrics` / `_lineage`)
+commit through `commit_rows`: the data file is one pyarrow parquet
+write into the same fresh commit dir, then the same locked metadata
+transaction — no Spark job.  Readers resolve a snapshot to its
 manifest's file list and `spark.read.parquet(*files)` — scans stay
 fully parallel and pruned (partition columns + row-group stats still
 apply).
@@ -35,6 +39,7 @@ import os
 import time
 import uuid
 from typing import Any
+from urllib.parse import quote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -148,11 +153,14 @@ class IceliteTable:
 
         return _Lock()
 
-    def _write_data(self, df: DataFrame,
-                    sort_within: list[str] | None = None) -> tuple[str, list[str]]:
+    def _new_commit_dir(self) -> str:
         os.makedirs(self.data_dir, exist_ok=True)
         os.makedirs(self.meta_dir, exist_ok=True)
-        rel_commit = f"data/commit-{uuid.uuid4().hex[:16]}"
+        return f"data/commit-{uuid.uuid4().hex[:16]}"
+
+    def _write_data(self, df: DataFrame,
+                    sort_within: list[str] | None = None) -> tuple[str, list[str]]:
+        rel_commit = self._new_commit_dir()
         target = os.path.join(self.root, rel_commit)
         out = df.sortWithinPartitions(*sort_within) if sort_within else df
         out.write.mode("errorIfExists").parquet(target)
@@ -195,7 +203,7 @@ class IceliteTable:
                 "mins": {k: v for k, v in mins.items() if ok.get(k)},
                 "maxs": {k: v for k, v in maxs.items() if ok.get(k)}}
 
-    def _commit_meta(self, df: DataFrame, added: list[str], op: str,
+    def _commit_meta(self, schema: StructType, added: list[str], op: str,
                      stage: str | None, props: dict | None,
                      keep_parent_files: bool, branch: str = "main") -> int:
         # footer-only stats for the files this commit adds (immutable
@@ -224,7 +232,7 @@ class IceliteTable:
                 "sid": sid,
                 "files": parent_files + added,
                 "added": added,
-                "schema": df.schema.json(),
+                "schema": schema.json(),
                 "stats": stats,
             }
             with open(os.path.join(self.meta_dir,
@@ -396,8 +404,37 @@ class IceliteTable:
         write (determinism for resume/diff tests, SURVEY.md §7.4.5).
         """
         _, added = self._write_data(df, sort_within)
-        return self._commit_meta(df, added, "append", stage, props,
+        return self._commit_meta(df.schema, added, "append", stage, props,
                                  keep_parent_files=True, branch=branch)
+
+    def commit_rows(self, rows: list[tuple], schema: StructType,
+                    stage: str | None = None) -> int:
+        """Append commit of a few driver-side rows (tuples in `schema`
+        order) with no Spark job: one pyarrow parquet file in a fresh
+        commit dir, then the same locked metadata transaction.  For
+        tables bounded by stage and file count (`_metrics`, `_lineage`);
+        DataFrames go through `commit_append`.  Every row first passes
+        the check `createDataFrame` applies (width, a None in a
+        non-nullable field, value types), so a bad row raises before
+        anything is written — pyarrow alone would truncate a float into
+        a long field."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+        from pyspark.sql.pandas.types import to_arrow_schema
+        from pyspark.sql.types import _make_type_verifier
+
+        verify = _make_type_verifier(schema)
+        for row in rows:
+            verify(row)
+        table = pa.Table.from_pylist(
+            [dict(zip(schema.names, row)) for row in rows],
+            schema=to_arrow_schema(schema))
+        rel_commit = self._new_commit_dir()
+        os.makedirs(os.path.join(self.root, rel_commit))
+        rel = f"{rel_commit}/part-00000.parquet"
+        pq.write_table(table, os.path.join(self.root, rel))
+        return self._commit_meta(schema, [rel], "append", stage, None,
+                                 keep_parent_files=True)
 
     def commit_replace(self, df: DataFrame, stage: str | None = None,
                        props: dict[str, str] | None = None,
@@ -408,7 +445,7 @@ class IceliteTable:
         current view.  This is the commit type behind compaction and
         MERGE results, mirroring Iceberg's rewrite/overwrite snapshots."""
         _, added = self._write_data(df)
-        return self._commit_meta(df, added, op, stage, props,
+        return self._commit_meta(df.schema, added, op, stage, props,
                                  keep_parent_files=False, branch=branch)
 
     # ------------------------------------------ metadata tables (A18)
@@ -654,6 +691,26 @@ class IceliteTable:
         if not files:
             return spark.createDataFrame([], self.schema(snapshot_id))
         return spark.read.parquet(*files)
+
+    def added_file_rows(self, spark: SparkSession,
+                        snapshot_id: int) -> list[tuple[str, int]]:
+        """(file URI, rows) for every non-empty file `snapshot_id` added,
+        from the manifest's commit-time footer stats (read from the
+        footers when a manifest has none): the strings and counts of
+        `scan_added(...).groupBy(input_file_name()).count()`, with no
+        Spark job."""
+        man = self._manifest(snapshot_id)
+        stats = man.get("stats", {})
+        out = []
+        for rel in man["added"]:
+            path = os.path.join(self.root, rel)
+            rows = (stats.get(rel) or self._file_stats(path))["rows"]
+            if rows:
+                # Hadoop's Path URI: the characters java.net.URI allows
+                # in a path stay as they are, the rest are %-escaped
+                out.append(("file://" + quote(os.path.abspath(path),
+                                              safe="/!$&'()*+,;=:@"), rows))
+        return out
 
     def scan_incremental(self, spark: SparkSession, from_sid: int,
                          to_sid: int) -> DataFrame:

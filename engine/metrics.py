@@ -6,11 +6,16 @@ per-partition lineage + metrics tables".
 Design (scale rationale, SURVEY.md §1.3):
 - *metrics* rows (one per stage run) use `df.observe(...)` so row counts
   ride the action itself — zero extra passes over the data;
-- *lineage* rows (one per output data file = write partition) come from a
-  column-less count over the just-committed files grouped by
-  `input_file_name()` — Parquet answers it from row-group metadata;
+- *lineage* rows (one per non-empty output data file = write partition)
+  come from the commit's own metadata through
+  `SnapshotTable.added_file_rows`: icelite reads the per-file row counts
+  its manifest recorded from the parquet footers at commit time, so no
+  data file is opened;
 - both land in ordinary append-only icelite tables, so they are
   queryable DataFrames and snapshot-versioned like everything else.
+  Their rows are bounded by stage and file count and already on the
+  driver, so they commit through `IceliteTable.commit_rows`: emitting a
+  stage's metrics and lineage starts no Spark job.
 """
 
 from __future__ import annotations
@@ -26,6 +31,7 @@ from pyspark.sql.types import (
 )
 
 from engine.icelite import IceliteTable
+from engine.table_protocol import parse_root
 
 METRICS_SCHEMA = StructType([
     StructField("run_id", StringType(), False),
@@ -58,8 +64,17 @@ class StageMetrics:
 
 class MetricsSink:
     def __init__(self, root: str):
-        self.metrics = IceliteTable(f"{root}/_metrics")
-        self.lineage = IceliteTable(f"{root}/_lineage")
+        """`root` is a pipeline root as `run_pipeline` takes it: a path
+        or 'icelite:<path>'.  The sink tables are icelite tables, so an
+        'iceberg:' root raises here, before any stage runs."""
+        kind, path = parse_root(root)
+        if kind == "iceberg":
+            raise ValueError(
+                f"MetricsSink: the _metrics/_lineage tables are icelite "
+                f"tables and {root!r} names an Iceberg catalog; run the "
+                "pipeline with emit_metrics=False or an icelite root")
+        self.metrics = IceliteTable(f"{path}/_metrics")
+        self.lineage = IceliteTable(f"{path}/_lineage")
 
     def observed(self, df: DataFrame, name: str = "rows") -> tuple[DataFrame, Observation]:
         """Attach a zero-cost row-count observation to a stage output."""
@@ -67,33 +82,20 @@ class MetricsSink:
         return df.observe(obs, F.count(F.lit(1)).alias("rows_out")), obs
 
     def emit_stage(self, spark: SparkSession, m: StageMetrics) -> None:
-        row = [(m.run_id, m.stage, m.sid, time.time(), m.rows_out,
-                m.wall_ms, json.dumps(m.extra, sort_keys=True))]
-        self.metrics.commit_append(
-            spark.createDataFrame(row, METRICS_SCHEMA), stage=m.stage
-        )
+        row = (m.run_id, m.stage, m.sid, time.time(), m.rows_out,
+               m.wall_ms, json.dumps(m.extra, sort_keys=True))
+        self.metrics.commit_rows([row], METRICS_SCHEMA, stage=m.stage)
 
     def emit_lineage(self, spark: SparkSession, run_id: str, stage: str,
                      table, sid: int) -> None:
-        """Per-partition (= per committed file) row counts for a commit.
-        Reads through SnapshotTable.scan_added (protocol surface, not
-        icelite's file list — works against any backend; r4 seam)."""
-        added = table.scan_added(spark, sid)
-        if added.isEmpty():
-            return
-        per_file = (
-            added
-            .groupBy(F.input_file_name().alias("file"))
-            .count()
-            .select(
-                F.lit(run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.lit(sid).cast("long").alias("sid"),
-                "file",
-                F.col("count").alias("rows"),
-            )
-        )
-        self.lineage.commit_append(per_file, stage=stage)
+        """Per-partition (= per non-empty committed file) row counts for
+        a commit, through SnapshotTable.added_file_rows (protocol
+        surface — works against any backend).  A commit that added no
+        rows emits nothing."""
+        rows = [(run_id, stage, sid, f, n)
+                for f, n in table.added_file_rows(spark, sid)]
+        if rows:
+            self.lineage.commit_rows(rows, LINEAGE_SCHEMA, stage=stage)
 
     def metrics_df(self, spark: SparkSession) -> DataFrame:
         return self.metrics.scan(spark)

@@ -63,13 +63,11 @@ def _stage_table(root: str, name: str, spark: SparkSession | None = None):
     Iceberg catalog with one table per stage — so switching a pipeline
     to Iceberg is a one-string config change, exercised by the
     backend-parametrized suite in tests/test_table_contract.py."""
-    from engine.table_protocol import make_table
-    kind, _, rest = root.partition(":")
+    from engine.table_protocol import make_table, parse_root
+    kind, loc = parse_root(root)
     if kind == "iceberg":
-        return make_table(f"iceberg:{rest}.{name}", spark)
-    if kind == "icelite":
-        return make_table(f"icelite:{rest}/{name}")
-    return make_table(f"icelite:{root}/{name}")
+        return make_table(f"iceberg:{loc}.{name}", spark)
+    return make_table(f"icelite:{loc}/{name}")
 
 
 def run_pipeline(spark: SparkSession, stages: list[Stage], root: str,

@@ -11,12 +11,27 @@ Settings rationale (SURVEY.md §4):
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of physical RAM, at most 48g.  A heap the size of the host
+    lets a long-lived local JVM keep dropped shuffles and checkpoints
+    (the cleaner frees them only after a GC) until the kernel's OOM
+    killer takes it."""
+    try:
+        ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    except (AttributeError, OSError, ValueError):
+        return "48g"
+    return f"{min(48 * 1024, ram // 2 // 2**20)}m"
+
 
 ENGINE_CONFS: dict[str, str] = {
     # local[N] runs everything in the driver JVM; the 1g default heap
-    # OOMs writing wide binary (image) tables. Host has 128 GiB.
-    "spark.driver.memory": "48g",
+    # OOMs writing wide binary (image) tables.  `extra=` overrides it.
+    "spark.driver.memory": _default_driver_memory(),
     "spark.driver.maxResultSize": "4g",
     # Spark 4.1: InferFiltersFromConstraints mis-infers a predicate that
     # contains a higher-order function onto the wrong join side (the

@@ -36,6 +36,7 @@ from __future__ import annotations
 from typing import Any, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 @runtime_checkable
@@ -71,6 +72,13 @@ class SnapshotTable(Protocol):
 
     def scan_added(self, spark: SparkSession, snapshot_id: int) -> DataFrame:
         """Incremental read: only rows added by that commit."""
+        ...
+
+    def added_file_rows(self, spark: SparkSession,
+                        snapshot_id: int) -> list[tuple[str, int]]:
+        """(file, rows) for every non-empty data file that commit added,
+        file spelled as `input_file_name()` spells it — the per-file
+        lineage of a commit."""
         ...
 
     def diff(self, spark: SparkSession, from_sid: int,
@@ -195,6 +203,13 @@ class IcebergTable:
                 .option("end-snapshot-id", snapshot_id)
                 .load(self.name))
 
+    def added_file_rows(self, spark: SparkSession,
+                        snapshot_id: int) -> list[tuple[str, int]]:
+        counts = (self.scan_added(spark, snapshot_id)
+                  .groupBy(F.input_file_name().alias("file")).count()
+                  .collect())
+        return [(r["file"], r["count"]) for r in counts]
+
     def diff(self, spark: SparkSession, from_sid: int,
              to_sid: int) -> DataFrame:
         return (spark.read.format("iceberg")
@@ -220,6 +235,16 @@ class IcebergTable:
         deleted = int(res[0].deleted_data_files_count) if res else 0
         assert self.current_snapshot_id() == cutoff_sid or True
         return (drop, deleted)
+
+
+def parse_root(root: str) -> tuple[str, str]:
+    """Split a pipeline root into (backend, location):
+    'iceberg:<catalog.db>' -> ('iceberg', '<catalog.db>'); 'icelite:<path>'
+    and a plain path -> ('icelite', '<path>')."""
+    kind, _, rest = root.partition(":")
+    if kind in ("iceberg", "icelite"):
+        return kind, rest
+    return "icelite", root
 
 
 def make_table(spec: str, spark: SparkSession | None = None):

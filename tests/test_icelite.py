@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import json
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
 from engine.icelite import IceliteTable
-from engine.metrics import MetricsSink, StageMetrics
+from engine.metrics import METRICS_SCHEMA, MetricsSink, StageMetrics
 
 
 def test_commit_scan_timetravel(spark, tmp_path):
@@ -74,6 +77,79 @@ def test_metrics_and_lineage(spark, tmp_path):
     lg = sink.lineage_df(spark).collect()
     assert sum(r.rows for r in lg) == 100
     assert len(lg) == 3  # one row per written partition file
+
+
+def _per_file_recompute(spark, table, sid):
+    return sorted(
+        (r["file"], r["count"]) for r in table.scan_added(spark, sid)
+        .groupBy(F.input_file_name().alias("file")).count().collect())
+
+
+@pytest.mark.parametrize("case", ["multi_file", "empty_commit",
+                                  "no_manifest_stats"])
+def test_lineage_rows_match_input_file_name_recompute(spark, tmp_path, case):
+    """Lineage read from the manifest equals the per-file count Spark
+    computes over the committed files: same file strings, same rows."""
+    root = str(tmp_path / "pipe")
+    sink = MetricsSink(root)
+    data = IceliteTable(f"{root}/stage1")
+    df = spark.range(100).repartition(3)
+    if case == "empty_commit":
+        df = df.filter(F.col("id") < 0)
+    sid = data.commit_append(df, stage="stage1")
+    if case == "no_manifest_stats":
+        path = os.path.join(data.meta_dir, f"manifest-{sid:08d}.json")
+        with open(path) as f:
+            man = json.load(f)
+        del man["stats"]
+        with open(path, "w") as f:
+            json.dump(man, f)
+    expect = _per_file_recompute(spark, data, sid)
+    assert sorted(data.added_file_rows(spark, sid)) == expect
+    sink.emit_lineage(spark, "r1", "stage1", data, sid)
+    if case == "empty_commit":
+        assert data.added_files(sid)  # 0-row files are written, then skipped
+        assert expect == [] and not sink.lineage.exists()
+        return
+    assert len(expect) == 3 and sum(n for _, n in expect) == 100
+    lg = sink.lineage_df(spark).collect()
+    assert {(r.run_id, r.stage, r.sid) for r in lg} == {("r1", "stage1", sid)}
+    assert sorted((r.file, r.rows) for r in lg) == expect
+
+
+def test_sink_emits_start_no_spark_job(spark, tmp_path):
+    root = str(tmp_path / "pipe")
+    sink = MetricsSink(root)
+    data = IceliteTable(f"{root}/stage1")
+    sid = data.commit_append(spark.range(100).repartition(3), stage="stage1")
+    tracker = spark.sparkContext.statusTracker()
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+
+    def job_ids():
+        bus.waitUntilEmpty()  # the tracker learns of jobs through the bus
+        return set(tracker.getJobIdsForGroup())
+
+    before = job_ids()
+    sink.emit_stage(spark, StageMetrics("r1", "stage1", sid, 100, 12.5, {}))
+    sink.emit_lineage(spark, "r1", "stage1", data, sid)
+    assert job_ids() == before
+    assert sink.lineage_df(spark).count() == 3
+    assert job_ids() != before  # the tracker does see the scan's job
+
+
+def test_commit_rows_checks_rows_before_writing(spark, tmp_path):
+    t = IceliteTable(str(tmp_path / "m"))
+    good = ("r1", "s", 1, 2.5, 10, 3.0, "{}")
+    with pytest.raises(ValueError, match="run_id"):
+        t.commit_rows([good, (None,) + good[1:]], METRICS_SCHEMA, stage="s")
+    with pytest.raises(TypeError, match="rows_out"):
+        t.commit_rows([good[:4] + (1.5,) + good[5:]], METRICS_SCHEMA)
+    with pytest.raises(ValueError):
+        t.commit_rows([good[:-1]], METRICS_SCHEMA)
+    assert not t.exists() and not os.path.exists(t.data_dir)
+    sid = t.commit_rows([good], METRICS_SCHEMA, stage="s")
+    assert t.snapshots()[-1]["stage"] == "s" and t.orphan_files() == []
+    assert [tuple(r) for r in t.scan(spark, sid).collect()] == [good]
 
 
 def test_compaction_row_identical_and_time_travels(spark, tmp_path):

@@ -4,10 +4,12 @@ identical on re-run, identical after kill-and-resume at a checkpoint."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from engine.flagship import flagship_config, flagship_stages
-from engine.pipeline import KillPoint, run_pipeline, stage_output
+from engine.pipeline import KillPoint, Stage, run_pipeline, stage_output
 from engine.geo.layer import PolygonLayer
 from engine.synth import gen_images_local
 from oracle import geo as og
@@ -111,3 +113,26 @@ def test_metrics_and_lineage_populated(spark, tmp_path, layer):
     assert "images" in stages and "joined" in stages
     img_rows = sum(r.rows for r in lg if r.stage == "images")
     assert img_rows == N
+
+
+def test_icelite_spelled_root_keeps_sink_under_root(spark, tmp_path,
+                                                    monkeypatch):
+    from engine.icelite import IceliteTable
+    cwd = tmp_path / "cwd"
+    cwd.mkdir()
+    monkeypatch.chdir(cwd)
+    root = tmp_path / "pipe"
+    res = run_pipeline(spark, [Stage("only", lambda s, _: s.range(10))],
+                       f"icelite:{root}", {"k": 1})
+    assert res.executed == ["only"]
+    for name in ("only", "_metrics", "_lineage"):
+        assert IceliteTable(str(root / name)).exists(), name
+    assert os.listdir(cwd) == []
+
+
+def test_iceberg_root_sink_fails_before_first_stage(spark):
+    ran = []
+    with pytest.raises(ValueError, match="emit_metrics=False"):
+        run_pipeline(spark, [Stage("only", lambda s, _: ran.append(s))],
+                     "iceberg:cat.db", {"k": 1})
+    assert ran == []
