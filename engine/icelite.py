@@ -37,6 +37,7 @@ from __future__ import annotations
 import json
 import os
 import time
+import unicodedata
 import uuid
 from typing import Any
 from urllib.parse import quote
@@ -44,6 +45,21 @@ from urllib.parse import quote
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+# java.net.URI path characters besides letters, digits and _.-~
+_URI_PATH_SAFE = "/!$&'()*+,;=:@"
+
+
+def _file_uri(path: str) -> str:
+    """`file://` URI of an absolute local path as Hadoop's Path, and so
+    `input_file_name()`, spells it.  java.net.URI %-escapes (as UTF-8)
+    the ASCII characters a URI path may not hold and the non-ASCII
+    space and control characters; every other non-ASCII character
+    stays as it is."""
+    return "file://" + "".join(
+        c if ord(c) > 127 and unicodedata.category(c) not in
+        ("Zs", "Zl", "Zp", "Cc") else quote(c, safe=_URI_PATH_SAFE)
+        for c in path)
 
 
 class IceliteTable:
@@ -698,7 +714,7 @@ class IceliteTable:
         from the manifest's commit-time footer stats (read from the
         footers when a manifest has none): the strings and counts of
         `scan_added(...).groupBy(input_file_name()).count()`, with no
-        Spark job."""
+        Spark job — the per-file lineage of a commit."""
         man = self._manifest(snapshot_id)
         stats = man.get("stats", {})
         out = []
@@ -706,10 +722,7 @@ class IceliteTable:
             path = os.path.join(self.root, rel)
             rows = (stats.get(rel) or self._file_stats(path))["rows"]
             if rows:
-                # Hadoop's Path URI: the characters java.net.URI allows
-                # in a path stay as they are, the rest are %-escaped
-                out.append(("file://" + quote(os.path.abspath(path),
-                                              safe="/!$&'()*+,;=:@"), rows))
+                out.append((_file_uri(os.path.abspath(path)), rows))
         return out
 
     def scan_incremental(self, spark: SparkSession, from_sid: int,

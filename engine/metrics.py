@@ -8,9 +8,9 @@ Design (scale rationale, SURVEY.md §1.3):
   ride the action itself — zero extra passes over the data;
 - *lineage* rows (one per non-empty output data file = write partition)
   come from the commit's own metadata through
-  `SnapshotTable.added_file_rows`: icelite reads the per-file row counts
-  its manifest recorded from the parquet footers at commit time, so no
-  data file is opened;
+  `IceliteTable.added_file_rows`: the per-file row counts the manifest
+  recorded from the parquet footers at commit time, so no data file is
+  opened;
 - both land in ordinary append-only icelite tables, so they are
   queryable DataFrames and snapshot-versioned like everything else.
   Their rows are bounded by stage and file count and already on the
@@ -87,11 +87,11 @@ class MetricsSink:
         self.metrics.commit_rows([row], METRICS_SCHEMA, stage=m.stage)
 
     def emit_lineage(self, spark: SparkSession, run_id: str, stage: str,
-                     table, sid: int) -> None:
+                     table: IceliteTable, sid: int) -> None:
         """Per-partition (= per non-empty committed file) row counts for
-        a commit, through SnapshotTable.added_file_rows (protocol
-        surface — works against any backend).  A commit that added no
-        rows emits nothing."""
+        a commit of the icelite stage `table`, from its manifest
+        (`IceliteTable.added_file_rows`).  A commit that added no rows
+        emits nothing."""
         rows = [(run_id, stage, sid, f, n)
                 for f, n in table.added_file_rows(spark, sid)]
         if rows:

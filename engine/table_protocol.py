@@ -36,7 +36,6 @@ from __future__ import annotations
 from typing import Any, Protocol, runtime_checkable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 
 @runtime_checkable
@@ -72,13 +71,6 @@ class SnapshotTable(Protocol):
 
     def scan_added(self, spark: SparkSession, snapshot_id: int) -> DataFrame:
         """Incremental read: only rows added by that commit."""
-        ...
-
-    def added_file_rows(self, spark: SparkSession,
-                        snapshot_id: int) -> list[tuple[str, int]]:
-        """(file, rows) for every non-empty data file that commit added,
-        file spelled as `input_file_name()` spells it — the per-file
-        lineage of a commit."""
         ...
 
     def diff(self, spark: SparkSession, from_sid: int,
@@ -203,13 +195,6 @@ class IcebergTable:
                 .option("end-snapshot-id", snapshot_id)
                 .load(self.name))
 
-    def added_file_rows(self, spark: SparkSession,
-                        snapshot_id: int) -> list[tuple[str, int]]:
-        counts = (self.scan_added(spark, snapshot_id)
-                  .groupBy(F.input_file_name().alias("file")).count()
-                  .collect())
-        return [(r["file"], r["count"]) for r in counts]
-
     def diff(self, spark: SparkSession, from_sid: int,
              to_sid: int) -> DataFrame:
         return (spark.read.format("iceberg")
@@ -240,9 +225,10 @@ class IcebergTable:
 def parse_root(root: str) -> tuple[str, str]:
     """Split a pipeline root into (backend, location):
     'iceberg:<catalog.db>' -> ('iceberg', '<catalog.db>'); 'icelite:<path>'
-    and a plain path -> ('icelite', '<path>')."""
-    kind, _, rest = root.partition(":")
-    if kind in ("iceberg", "icelite"):
+    and a plain path (one named 'icelite' or 'iceberg' too) ->
+    ('icelite', '<path>')."""
+    kind, sep, rest = root.partition(":")
+    if sep and kind in ("iceberg", "icelite"):
         return kind, rest
     return "icelite", root
 

@@ -86,11 +86,14 @@ def _per_file_recompute(spark, table, sid):
 
 
 @pytest.mark.parametrize("case", ["multi_file", "empty_commit",
-                                  "no_manifest_stats"])
+                                  "no_manifest_stats", "non_ascii_root"])
 def test_lineage_rows_match_input_file_name_recompute(spark, tmp_path, case):
     """Lineage read from the manifest equals the per-file count Spark
-    computes over the committed files: same file strings, same rows."""
-    root = str(tmp_path / "pipe")
+    computes over the committed files: same file strings, same rows.
+    The non-ASCII root mixes characters java.net.URI keeps raw (é, 日)
+    with ones it escapes (space, no-break space, %, #)."""
+    root = str(tmp_path / ("pipé 日\u00a0%#" if case == "non_ascii_root"
+                           else "pipe"))
     sink = MetricsSink(root)
     data = IceliteTable(f"{root}/stage1")
     df = spark.range(100).repartition(3)
@@ -115,6 +118,15 @@ def test_lineage_rows_match_input_file_name_recompute(spark, tmp_path, case):
     lg = sink.lineage_df(spark).collect()
     assert {(r.run_id, r.stage, r.sid) for r in lg} == {("r1", "stage1", sid)}
     assert sorted((r.file, r.rows) for r in lg) == expect
+
+
+def test_added_file_rows_count_the_commit(spark, tmp_path):
+    t = IceliteTable(str(tmp_path / "t"))
+    t.commit_append(spark.range(10))
+    s2 = t.commit_append(spark.range(10, 15).repartition(2))
+    per_file = t.added_file_rows(spark, s2)
+    assert sum(n for _, n in per_file) == 5
+    assert all(isinstance(f, str) and n > 0 for f, n in per_file)
 
 
 def test_sink_emits_start_no_spark_job(spark, tmp_path):

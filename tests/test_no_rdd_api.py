@@ -75,8 +75,6 @@ COLLECT_SITES = {
         "global aggregate: one row"],
     ("engine/table_protocol.py", "IcebergTable.snapshots"): [
         "snapshot metadata table: one row per commit"],
-    ("engine/table_protocol.py", "IcebergTable.added_file_rows"): [
-        "one row per data file the commit added"],
     ("engine/table_protocol.py", "IcebergTable.expire_snapshots"): [
         "expire_snapshots procedure result: one row"],
     ("engine/text/bpe.py", "bpe_stats"): [

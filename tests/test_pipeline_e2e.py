@@ -130,6 +130,15 @@ def test_icelite_spelled_root_keeps_sink_under_root(spark, tmp_path,
     assert os.listdir(cwd) == []
 
 
+def test_root_named_like_a_backend_is_a_plain_path(tmp_path, monkeypatch):
+    from engine.metrics import MetricsSink
+    from engine.table_protocol import parse_root
+    monkeypatch.chdir(tmp_path)
+    for name in ("icelite", "iceberg"):
+        assert parse_root(name) == ("icelite", name)
+        assert MetricsSink(name).metrics.root == f"{name}/_metrics"
+
+
 def test_iceberg_root_sink_fails_before_first_stage(spark):
     ran = []
     with pytest.raises(ValueError, match="emit_metrics=False"):

@@ -52,8 +52,7 @@ def test_protocol_shape():
     for cls in (IceliteTable, IcebergTable):
         for meth in ("exists", "snapshots", "current_snapshot_id",
                      "find_snapshot", "commit_append", "commit_replace",
-                     "scan", "scan_added", "added_file_rows", "diff",
-                     "expire_snapshots"):
+                     "scan", "scan_added", "diff", "expire_snapshots"):
             assert callable(getattr(cls, meth)), (cls, meth)
 
 
@@ -72,14 +71,6 @@ def test_appends_accumulate_and_time_travel(table, spark):
     assert _rows(table.scan(spark, s1)) == _rows(_df(spark, 0, 10))
     assert _rows(table.scan(spark, s2)) == _rows(_df(spark, 0, 15))
     assert _rows(table.scan_added(spark, s2)) == _rows(_df(spark, 10, 15))
-
-
-def test_added_file_rows_count_the_commit(table, spark):
-    table.commit_append(_df(spark, 0, 10))
-    s2 = table.commit_append(_df(spark, 10, 15).repartition(2))
-    per_file = table.added_file_rows(spark, s2)
-    assert sum(n for _, n in per_file) == 5
-    assert all(isinstance(f, str) and n > 0 for f, n in per_file)
 
 
 def test_replace_resets_view_preserving_history(table, spark):
