@@ -4863,12 +4863,11 @@ def q_cell_ring(spark, sf):
     same magic-mask Morton SQL used by cell_encode.  `id <= 50` replaces
     the r1 `limit(50)` so the row subset is deterministic."""
     _prep(spark)
-    from engine.geo.cells import cell_parent_col, make_disk_udf, with_cell
-    pts = with_cell(_points(spark, sf)).filter(F.col("id") <= 50)
-    disk = make_disk_udf(10, 2)
-    return pts.select(
-        "id", cell_parent_col("cell", 10).alias("cell10")
-    ).select("id", F.explode(disk(F.col("cell10"))).alias("ring_cell"))
+    from engine.geo.cells import cell_parent_col, explode_disk, with_cell
+    pts = with_cell(_points(spark, sf)).filter(F.col("id") <= 50).select(
+        "id", cell_parent_col("cell", 10).alias("cell10"))
+    return explode_disk(pts, 10, 2, "cell10", "ring_cell").select(
+        "id", "ring_cell")
 
 
 def q_img_decode_stats(spark, sf):

@@ -2,10 +2,12 @@
 Web-Mercator grid (SURVEY.md §2 C1/C2/C4; spec FIXTURES.md §3).
 
 BASELINE.json:6 — rows are "encoded to H3/S2 cells via vectorized
-pandas/Arrow UDFs (batched cell encode, no per-row Python)".  The encode
-is a scalar pandas UDF over whole Arrow batches (numpy bit ops); parent /
-prefix extraction is a *native* column expression (shiftright) so it stays
-inside whole-stage codegen and never crosses the Python boundary.
+pandas/Arrow UDFs (batched cell encode, no per-row Python)".  Here the
+encode, parent/prefix extraction and the disk explode are all *native*
+column expressions (mercator arithmetic, Morton bit cascades, shiftright,
+bounded sequences), so they stay inside whole-stage codegen and never
+cross the Python boundary.  The numpy kernels below compute the same
+values; tests and the kNN guarantee UDFs use them.
 
 Scale note: the cell id is a single int64 — prefix joins, range pruning
 and partitioning all work on a primitive column, which is the cheapest
@@ -15,10 +17,8 @@ possible shuffle key at 10^12 rows.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
 
 from oracle.geo import LEVEL, MAX_LAT
 
@@ -120,43 +120,21 @@ def merc_xy_sql(lon_col: str, lat_col: str, level: int = LEVEL) -> tuple[str, st
     return xi, yi
 
 
-def cell_encode_col(lon_col: str = "lon", lat_col: str = "lat") -> Column:
-    """C1, native form — the whole encode (mercator + Morton interleave)
-    as one JVM column expression: no Python worker in the hot path, and
-    the Morton cascade is the same magic-mask sequence as the numpy
-    kernel, so values are identical (floor-boundary agreement between
-    JVM and C libm verified empirically; the numpy UDF form remains the
-    reference kernel for tests).
-
-    NOTE for callers composing manually: the bit cascade references its
-    input 32x — feed it a *column*, never an inline ln/tan expression,
-    or the expression tree (and the generated Java) blows up ~64x.
-    `with_cell` binds xi/yi as intermediate columns for exactly this
-    reason."""
-    xi, yi = merc_xy_sql(lon_col, lat_col)
-    return F.expr(f"({part1by1_sql(xi)} | ({part1by1_sql(yi)} << 1))")
-
-
-@F.pandas_udf(LongType())
-def cell_encode_udf(lat: pd.Series, lon: pd.Series) -> pd.Series:
-    """C1 — batched Arrow/numpy encode (reference kernel; same values as
-    cell_encode_col)."""
-    return pd.Series(cell_encode_np(lon.to_numpy(np.float64), lat.to_numpy(np.float64)))
-
-
 def with_cell(df: DataFrame, lat_col: str = "lat", lon_col: str = "lon",
-              out: str = "cell", native: bool = True) -> DataFrame:
-    """Attach the level-30 cell id column (native codegen by default;
-    `native=False` selects the Arrow-batched numpy kernel)."""
-    if native:
-        xi, yi = merc_xy_sql(lon_col, lat_col)
-        return (
-            df.withColumn("_cx", F.expr(xi)).withColumn("_cy", F.expr(yi))
-            .withColumn(out, F.expr(
-                f"({part1by1_sql('_cx')} | ({part1by1_sql('_cy')} << 1))"))
-            .drop("_cx", "_cy")
-        )
-    return df.withColumn(out, cell_encode_udf(F.col(lat_col), F.col(lon_col)))
+              out: str = "cell") -> DataFrame:
+    """Attach the level-30 cell id column: the whole encode (mercator +
+    Morton interleave) as JVM column expressions, bit-identical to
+    ``cell_encode_np`` (floor-boundary agreement between JVM and C libm
+    verified empirically).  The Morton cascade references its input 32x,
+    so the grid coords are bound as intermediate columns first; inlining
+    the ln/tan expression would blow the expression tree up ~64x."""
+    xi, yi = merc_xy_sql(lon_col, lat_col)
+    return (
+        df.withColumn("_cx", F.expr(xi)).withColumn("_cy", F.expr(yi))
+        .withColumn(out, F.expr(
+            f"({part1by1_sql('_cx')} | ({part1by1_sql('_cy')} << 1))"))
+        .drop("_cx", "_cy")
+    )
 
 
 def cell_parent_col(cell: Column | str, level: int) -> Column:
@@ -170,46 +148,37 @@ def with_cell_prefix(df: DataFrame, level: int, cell_col: str = "cell",
     return df.withColumn(out or f"cell_p{level}", cell_parent_col(cell_col, level))
 
 
-def ring_cells_np(x: int, y: int, z: int, k: int) -> np.ndarray:
-    """Vectorized ring k (exact Chebyshev distance) around (x, y) at level z."""
-    n = 1 << z
-    if k == 0:
-        if 0 <= y < n:
-            return morton_np(np.array([x], np.int64), np.array([y], np.int64))
-        return np.empty(0, np.int64)
-    d = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(d, d, indexing="ij")
-    mask = np.maximum(np.abs(dx), np.abs(dy)) == k
-    nx = (x + dx[mask]) % n
-    ny = y + dy[mask]
-    keep = (ny >= 0) & (ny < n)
-    return np.unique(morton_np(nx[keep], ny[keep]))
+def explode_disk(df: DataFrame, level: int, r: int | str,
+                 cell_col: str = "cell", out: str = "cell") -> DataFrame:
+    """C4 — one row per distinct cell of the Chebyshev disk of radius
+    ``r`` (an int, or the name of a per-row integer column) around each
+    row's level-``level`` cell ``cell_col``, written to ``out``; the
+    other columns repeat.  Same cells as ``oracle.geo.cell_disk``: x
+    wraps across the antimeridian and rows past the poles drop.
 
-
-def disk_cells_np(x: int, y: int, z: int, k: int) -> np.ndarray:
-    """Union of rings 0..k (kNN candidate block)."""
-    n = 1 << z
-    d = np.arange(-k, k + 1, dtype=np.int64)
-    dx, dy = np.meshgrid(d, d, indexing="ij")
-    nx = (x + dx.ravel()) % n
-    ny = y + dy.ravel()
-    keep = (ny >= 0) & (ny < n)
-    return np.unique(morton_np(nx[keep], ny[keep]))
-
-
-def make_disk_udf(level: int, k: int):
-    """C4 — pandas UDF: level-`level` cell id -> array of disk-k neighbor
-    cell ids (explode downstream to build kNN candidates)."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def disk_udf(cell: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        x, y = demorton_np(c)
-        return pd.Series(
-            [disk_cells_np(int(xv), int(yv), level, k) for xv, yv in zip(x, y)]
-        )
-
-    return disk_udf
+    Both offsets are bounded sequences, so no filter and no distinct is
+    needed: dx spans the whole row [0, n-1] once 2r+1 >= n (a wider
+    [-r, r] would wrap onto cells already emitted) and [-r, r] below
+    that; the row index spans [max(0, y-r), min(n-1, y+r)].  Native
+    Morton cascades end to end — no Python worker."""
+    assert 0 < level <= LEVEL and (isinstance(r, str) or r >= 0)
+    n = 1 << level
+    rc = (F.lit(r) if isinstance(r, int) else F.col(r)).cast("long")
+    wrap = 2 * rc + 1 >= n
+    return (
+        df.withColumn("_x", F.expr(compact1by1_sql(cell_col)))
+        .withColumn("_y", F.expr(compact1by1_sql(f"({cell_col} >> 1)")))
+        .withColumn("_dx", F.explode(F.sequence(
+            F.when(wrap, F.lit(0)).otherwise(-rc),
+            F.when(wrap, F.lit(n - 1)).otherwise(rc))))
+        .withColumn("_ny", F.explode(F.sequence(
+            F.greatest(F.col("_y") - rc, F.lit(0)),
+            F.least(F.col("_y") + rc, F.lit(n - 1)))))
+        .withColumn("_nx", F.pmod(F.col("_x") + F.col("_dx"), F.lit(n)))
+        .withColumn(out, F.expr(
+            f"({part1by1_sql('_nx')} | ({part1by1_sql('_ny')} << 1))"))
+        .drop("_x", "_y", "_dx", "_ny", "_nx")
+    )
 
 
 def dilate_cells(df: DataFrame, level: int, k: int,
@@ -218,37 +187,21 @@ def dilate_cells(df: DataFrame, level: int, k: int,
     """Morphological buffering of a cell covering at a fixed level
     (C-bf): every cell within Chebyshev grid distance <= ``k`` of a
     covering cell joins the covering — the covering-domain analog of
-    vector ST_Buffer, sharing ring semantics with ``ring_cells_np``
+    vector ST_Buffer, with the ring semantics of ``explode_disk``
     (x wraps across the antimeridian, out-of-range y rows drop at the
     poles).  Output is the distinct dilated (group_cols..., cell)
     frame at the same level; feed it to ``compact_cells`` for the
     minimal mixed-level buffered covering.
 
-    Scale shape: deinterleave and re-interleave are the native Morton
-    bit cascades (whole-stage codegen, no Python worker), the
-    (2k+1)^2 fan-out is an explode of a constant literal sequence,
-    and the only shuffle is the terminal distinct on the skinny
-    (group, cell) frame.  Coverings are layer metadata — this never
-    touches the fact table.
+    Scale shape: each covering cell explodes its disk natively
+    (``explode_disk``: Morton bit cascades, no Python worker), and the
+    only shuffle is the terminal distinct on the skinny (group, cell)
+    frame, which merges the overlapping disks of neighbouring cells.
+    Coverings are layer metadata — this never touches the fact table.
     """
-    assert k >= 0 and 0 < level <= LEVEL
-    n = 1 << level
-    gcols = [F.col(c) for c in group_cols]
-    d = F.sequence(F.lit(-k), F.lit(k))
-    return (
-        df.select(*group_cols, F.col(cell_col).alias("_c"))
-        .withColumn("_x", F.expr(compact1by1_sql("_c")))
-        .withColumn("_y", F.expr(compact1by1_sql("(_c >> 1)")))
-        .withColumn("_dx", F.explode(d))
-        .withColumn("_dy", F.explode(d))
-        .withColumn("_nx", F.pmod(F.col("_x") + F.col("_dx"), F.lit(n)))
-        .withColumn("_ny", F.col("_y") + F.col("_dy"))
-        .filter((F.col("_ny") >= 0) & (F.col("_ny") < n))
-        .select(*gcols, F.expr(
-            f"({part1by1_sql('_nx')} | ({part1by1_sql('_ny')} << 1))"
-        ).alias("cell"))
-        .distinct()
-    )
+    return (explode_disk(df.select(*group_cols, cell_col), level, k, cell_col)
+            .select(*group_cols, "cell")
+            .distinct())
 
 
 def erode_cells(df: DataFrame, level: int, k: int,

@@ -3,8 +3,8 @@
 BASELINE.json:6,14 — "kNN is answered by cell-ring expansion plus a
 per-partition sort".  Shape:
 
-  1. queries get a per-query disk of cells (radius r, Arrow-batched UDF),
-     exploded to (qid, cell_p) candidate cells;
+  1. queries get a per-query disk of cells (radius r), exploded natively
+     to (qid, cell_p) candidate cells (``cells.explode_disk``);
   2. equi-join against the point table's cell prefix (the only shuffle
      that touches the big side);
   3. exact haversine + Window(partitionBy qid, orderBy dist,id) row_number
@@ -27,31 +27,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, DoubleType, LongType
+from pyspark.sql.types import DoubleType, LongType
 
 from engine.ckpt import materialize
 
 from oracle.geo import EARTH_RADIUS_M
 
-from .cells import cell_parent_col, demorton_np, disk_cells_np, with_cell
+from .cells import cell_parent_col, demorton_np, explode_disk, with_cell
 from .dist import haversine_expr, haversine_udf
 from .layer import inv_mercy
-
-
-def make_disk_r_udf(level: int):
-    """(cell_p, r) -> array of disk-r cell ids at `level`."""
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def disk_r(cell: pd.Series, r: pd.Series) -> pd.Series:
-        c = cell.to_numpy(np.int64)
-        rr = r.to_numpy(np.int64)
-        x, y = demorton_np(c)
-        return pd.Series(
-            [disk_cells_np(int(xv), int(yv), level, int(rv))
-             for xv, yv, rv in zip(x, y, rr)]
-        )
-
-    return disk_r
 
 
 def block_guarantee_np(la: np.ndarray, lo: np.ndarray, x: np.ndarray,
@@ -157,7 +141,7 @@ def make_safe_r_udf(level: int, r0: int = 1):
 def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
              r0: int = 1, max_rounds: int = 12,
              qid_col: str = "qid", id_col: str = "image_id",
-             native_dist: bool = True, cache_points: bool = False,
+             cache_points: bool = False,
              checkpoint_dir: str | None = None) -> DataFrame:
     """Exact kNN: for each query row, the k nearest points (dist asc, id
     tiebreak).  Returns (qid, image_id, dist_m, rn).
@@ -165,7 +149,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     `queries` needs (qid, lat, lon); `points` needs (id, lat, lon) and
     reuses a `cell` column if present.
 
-    `native_dist` scores with the JVM-trig haversine (codegen; default).
+    Candidates are scored with the JVM-trig haversine (codegen).
     `cache_points=True` persists the narrow prepared points side so
     retry rounds don't rescan the base table — the right call when the
     points table fits cluster memory (benchmarks, dimension-sized
@@ -188,7 +172,6 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     q = q.select(qid_col, "lat", "lon",
                  cell_parent_col("cell", level).alias("q_cell"))
 
-    disk_udf = make_disk_r_udf(level)
     guar_udf = make_guarantee_udf(level)
     w = Window.partitionBy(qid_col).orderBy(F.asc("dist_m"), F.asc(id_col))
 
@@ -196,17 +179,12 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     done_parts: list[DataFrame] = []
 
     for _ in range(max_rounds):
-        cand_cells = pending.withColumn(
-            "cell_p", F.explode(disk_udf(F.col("q_cell"), F.col("r")))
+        scored = (
+            explode_disk(pending, level, "r", "q_cell", "cell_p")
+            .join(pts, "cell_p", "inner")
+            .withColumn("dist_m", haversine_expr(
+                F.col("lon"), F.col("lat"), F.col("p_lon"), F.col("p_lat")))
         )
-        cands = cand_cells.join(pts, "cell_p", "inner")
-        if native_dist:
-            dist = haversine_expr(F.col("lon"), F.col("lat"),
-                                  F.col("p_lon"), F.col("p_lat"))
-        else:
-            dist = haversine_udf(F.col("lon"), F.col("lat"),
-                                 F.col("p_lon"), F.col("p_lat"))
-        scored = cands.withColumn("dist_m", dist)
         topk = (
             scored.withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") <= k)
@@ -273,8 +251,7 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
 def dwithin_join(queries: DataFrame, points: DataFrame, level: int,
                  radius_m: float | None = None,
                  qid_col: str = "qid", id_col: str = "image_id",
-                 radius_col: str = "radius_m",
-                 native_dist: bool = True) -> DataFrame:
+                 radius_col: str = "radius_m") -> DataFrame:
     """D13 — radius (distance-within) join: for each query row, EVERY
     point within its radius (metres, great-circle).  Returns
     (qid, image_id, dist_m).
@@ -307,20 +284,12 @@ def dwithin_join(queries: DataFrame, points: DataFrame, level: int,
                  cell_parent_col("cell", level).alias("q_cell"))
 
     safe_r = make_safe_r_udf(level)
-    disk_udf = make_disk_r_udf(level)
-    cand = (
-        q.withColumn("r", safe_r(F.col("lat"), F.col("lon"),
+    q = q.withColumn("r", safe_r(F.col("lat"), F.col("lon"),
                                  F.col("q_cell"), F.col("_rad")))
-        .withColumn("cell_p", F.explode(disk_udf(F.col("q_cell"), F.col("r"))))
-        .join(pts, "cell_p", "inner")
-    )
-    if native_dist:
-        dist = haversine_expr(F.col("lon"), F.col("lat"),
-                              F.col("p_lon"), F.col("p_lat"))
-    else:
-        dist = haversine_udf(F.col("lon"), F.col("lat"),
-                             F.col("p_lon"), F.col("p_lat"))
-    return (cand.withColumn("dist_m", dist)
+    return (explode_disk(q, level, "r", "q_cell", "cell_p")
+            .join(pts, "cell_p", "inner")
+            .withColumn("dist_m", haversine_expr(
+                F.col("lon"), F.col("lat"), F.col("p_lon"), F.col("p_lat")))
             .filter(F.col("dist_m") <= F.col("_rad"))
             .select(qid_col, id_col, "dist_m"))
 

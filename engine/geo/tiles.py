@@ -2,64 +2,25 @@
 
 BASELINE.json:6 — "raster<->vector tiling assigns each decoded image to
 slippy-map/H3 tiles".  Tile (z, x, y) is derived from the level-30 cell id
-with *native* bit ops (shiftright on the de-interleaved coords is not
-native, so we derive x/y from the cell's parent at level z, whose Morton
-bits are de-interleaved in a pandas UDF only for the quadkey string; the
-integer tile coords themselves come straight from the lon/lat batch encode
-or from the cell via the same UDF).
+with *native* bit ops: the tile is the cell's level-z parent
+(shiftright), its x/y are the parent's de-interleaved Morton bits (the
+compact cascade as a column expression), and the quadkey is z base-4
+digits concatenated from those x/y columns.  No Python worker touches
+the tiling stage.
 
-Design: at 10^12 rows the hot path (`with_tile`) adds three int columns
-via one Arrow-batched UDF call; the quadkey string is optional (strings
-are ~8x the shuffle weight of ints — only materialize when exporting).
+Design: at 10^12 rows the hot path (`with_tile`) adds three int columns;
+the quadkey string is optional (strings are ~8x the shuffle weight of
+ints — only materialize when exporting).
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType, StringType
 
 from oracle.geo import LEVEL
 
-from .cells import compact1by1_sql, demorton_np
-
-
-def tile_xy_from_cell_np(cell: np.ndarray, z: int):
-    """Level-30 Morton cell -> slippy tile coords at zoom z (int64)."""
-    x30, y30 = demorton_np(cell.astype(np.int64))
-    return x30 >> np.int64(LEVEL - z), y30 >> np.int64(LEVEL - z)
-
-
-def quadkey_np(x: np.ndarray, y: np.ndarray, z: int) -> np.ndarray:
-    """Base-4 quadkey strings, MSB first, length z (FIXTURES.md §3)."""
-    out = np.full(x.shape, "", dtype=object)
-    for i in range(z - 1, -1, -1):
-        digit = ((x >> np.int64(i)) & 1) | (((y >> np.int64(i)) & 1) << np.int64(1))
-        out = out + digit.astype(str).astype(object)
-    return out
-
-
-def make_tile_udfs(z: int):
-    """pandas UDFs cell -> tile_x / tile_y / quadkey at zoom z."""
-
-    @F.pandas_udf(LongType())
-    def tile_x_udf(cell: pd.Series) -> pd.Series:
-        tx, _ = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(tx)
-
-    @F.pandas_udf(LongType())
-    def tile_y_udf(cell: pd.Series) -> pd.Series:
-        _, ty = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(ty)
-
-    @F.pandas_udf(StringType())
-    def quadkey_udf(cell: pd.Series) -> pd.Series:
-        tx, ty = tile_xy_from_cell_np(cell.to_numpy(np.int64), z)
-        return pd.Series(quadkey_np(tx, ty, z))
-
-    return tile_x_udf, tile_y_udf, quadkey_udf
+from .cells import compact1by1_sql
 
 
 def tile_x_col(cell_col: str, z: int):
@@ -82,24 +43,13 @@ def quadkey_expr(tx: str, ty: str, z: int) -> str:
 
 
 def with_tile(df: DataFrame, z: int, cell_col: str = "cell",
-              quadkey_col: bool = False, native: bool = True) -> DataFrame:
+              quadkey_col: bool = False) -> DataFrame:
     """Attach tile_z / tile_x / tile_y (+ optional quadkey) columns.
 
-    Native by default: tile_morton = cell >> 2*(30-z) (the tile IS the
-    cell's level-z parent), and de-interleave/quadkey are pure bit-op
-    column expressions — the whole tiling stage stays in whole-stage
-    codegen with zero Python workers.  `native=False` selects the
-    Arrow-batched numpy kernels (reference form, identical values)."""
-    if not native:
-        tile_x_udf, tile_y_udf, quadkey_udf = make_tile_udfs(z)
-        out = (
-            df.withColumn("tile_z", F.lit(z))
-            .withColumn("tile_x", tile_x_udf(F.col(cell_col)))
-            .withColumn("tile_y", tile_y_udf(F.col(cell_col)))
-        )
-        if quadkey_col:
-            out = out.withColumn("quadkey", quadkey_udf(F.col(cell_col)))
-        return out
+    tile_morton = cell >> 2*(30-z) (the tile IS the cell's level-z
+    parent), and de-interleave/quadkey are pure bit-op column
+    expressions — the whole tiling stage stays in whole-stage codegen
+    with zero Python workers."""
     out = (
         df.withColumn("tile_z", F.lit(z))
         .withColumn("tile_x", tile_x_col(cell_col, z))

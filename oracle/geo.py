@@ -90,11 +90,14 @@ def cell_ring(x: int, y: int, z: int, k: int) -> list[int]:
 
 
 def cell_disk(x: int, y: int, z: int, k: int) -> list[int]:
-    """Union of rings 0..k (the kNN candidate block)."""
-    out = set()
-    for r in range(k + 1):
-        out.update(cell_ring(x, y, z, r))
-    return sorted(out)
+    """Union of rings 0..k (the kNN candidate block): every offset with
+    max(|dx|, |dy|) <= k, x wrapped mod 2^z, y outside [0, 2^z) dropped.
+    Sorted, deduplicated.  One pass over the (2k+1)^2 offsets, where a
+    ring-by-ring union would take ~(2k+1)^3 / 6 steps."""
+    n = 1 << z
+    return sorted({morton((x + dx) % n, y + dy, z)
+                   for dx in range(-k, k + 1) for dy in range(-k, k + 1)
+                   if 0 <= y + dy < n})
 
 
 # ---------------------------------------------------------------- tiles
@@ -202,7 +205,7 @@ def dilate_cells_py(cells: list[int], level: int, k: int) -> list[int]:
     """Sequential oracle for Chebyshev-disk covering dilation
     (engine/geo/cells.py ``dilate_cells`` must match this exactly):
     x wraps mod 2^level, out-of-range y drops — the ring semantics of
-    ``ring_cells_np``.  Returns the sorted distinct dilated cells."""
+    ``cell_ring``.  Returns the sorted distinct dilated cells."""
     n = 1 << level
     out: set[int] = set()
     for c in cells:

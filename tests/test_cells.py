@@ -54,11 +54,53 @@ def test_cell_parent_matches_oracle():
         np.testing.assert_array_equal(got, want)
 
 
-def test_ring_and_disk_match_oracle():
-    cases = [(5, 5, 4, 0), (5, 5, 4, 1), (0, 0, 4, 2), (15, 15, 4, 3), (8, 0, 4, 2)]
-    for x, y, z, k in cases:
-        assert ec.ring_cells_np(x, y, z, k).tolist() == og.cell_ring(x, y, z, k)
-        assert ec.disk_cells_np(x, y, z, k).tolist() == og.cell_disk(x, y, z, k)
+def _disk_cases(z):
+    """The four corners, a pole-row cell and an interior cell at level z,
+    each with radii 0..3, 17 and 300 (past the whole-row wrap)."""
+    n = 1 << z
+    xys = [(0, 0), (n - 1, 0), (0, n - 1), (n - 1, n - 1), (n // 2, 0),
+           (n // 2 - 1, n // 2)]
+    return [(x, y, k) for x, y in xys for k in (0, 1, 2, 3, 17, 300)]
+
+
+def test_ring_and_disk_match_oracle(spark):
+    """explode_disk with a per-row radius column emits exactly
+    og.cell_disk — sorted lists, so a cell emitted twice fails — and,
+    while 2k+1 <= 2^z (no x offset wraps onto another), the ring
+    differences of consecutive radii equal og.cell_ring."""
+    for z in (2, 4, 8):
+        cases = _disk_cases(z)
+        df = spark.createDataFrame(
+            [(i, og.morton(x, y, z), k) for i, (x, y, k) in enumerate(cases)],
+            "case long, cp long, r int")
+        got = {row.case: row.cells for row in
+               ec.explode_disk(df, z, "r", "cp", "c").groupBy("case")
+               .agg(F.sort_array(F.collect_list("c")).alias("cells"))
+               .collect()}
+        disks = {}
+        for i, (x, y, k) in enumerate(cases):
+            assert got.get(i, []) == og.cell_disk(x, y, z, k), (x, y, z, k)
+            disks[x, y, k] = set(got.get(i, []))
+        for (x, y, k), d in disks.items():
+            if 0 < k <= 3 and 2 * k + 1 <= 1 << z:
+                ring = sorted(d - disks[x, y, k - 1])
+                assert ring == og.cell_ring(x, y, z, k), (x, y, z, k)
+
+
+def test_disk_literal_radius_keeps_row_columns(spark):
+    df = ec.with_cell(spark.createDataFrame(
+        pd.DataFrame({"id": [1, 2], "lon": [0.5, 179.9], "lat": [0.5, 85.0]})))
+    level, k = 8, 2
+    df = df.select("id", ec.cell_parent_col("cell", level).alias("cp"))
+    out = ec.explode_disk(df, level, k, "cp")
+    assert out.columns == ["id", "cp", "cell"]
+    got = {}
+    for r in out.collect():
+        got.setdefault((r.id, r.cp), []).append(r.cell)
+    assert len(got) == 2
+    for (_, cp), cells in got.items():
+        x, y = og.demorton(cp, level)
+        assert sorted(cells) == og.cell_disk(x, y, level, k)
 
 
 def test_ring_wraps_antimeridian_and_clamps_poles():
@@ -68,7 +110,6 @@ def test_ring_wraps_antimeridian_and_clamps_poles():
     xs_ys = [og.demorton(c, z) for c in got]
     assert (15, 0) in xs_ys and (1, 0) in xs_ys
     assert all(0 <= y < (1 << z) for _, y in xs_ys)
-    assert ec.ring_cells_np(0, 0, z, k).tolist() == got
 
 
 def test_spark_cell_udf_and_prefix(spark):
@@ -81,14 +122,3 @@ def test_spark_cell_udf_and_prefix(spark):
         want = og.cell_encode(r.lon, r.lat)
         assert r.cell == want
         assert r.cell_p12 == og.cell_parent(want, 12)
-
-
-def test_spark_disk_udf(spark):
-    pdf = pd.DataFrame({"lon": [0.5, 179.9], "lat": [0.5, 0.1]})
-    df = ec.with_cell(spark.createDataFrame(pdf))
-    level, k = 8, 2
-    df = df.withColumn("cp", ec.cell_parent_col("cell", level))
-    df = df.withColumn("disk", ec.make_disk_udf(level, k)(F.col("cp")))
-    for r in df.collect():
-        x, y = og.demorton(r.cp, level)
-        assert sorted(r.disk) == og.cell_disk(x, y, level, k)

@@ -106,10 +106,12 @@ def test_dwithin_matches_bruteforce(spark):
         "lat": [row.lat for row in qs.orderBy("qid").collect()],
         "radius_m": radii,
     }))
-    fast = {(r_.qid, r_.image_id) for r_ in
-            dwithin_join(qs, pts, level=6).collect()}
-    slow = {(r_.qid, r_.image_id) for r_ in
-            dwithin_bruteforce_df(qs, pts).collect()}
+    # sorted lists, not sets: a disk that emitted a cell twice would
+    # duplicate every point in it
+    fast = sorted((r_.qid, r_.image_id) for r_ in
+                  dwithin_join(qs, pts, level=6).collect())
+    slow = sorted((r_.qid, r_.image_id) for r_ in
+                  dwithin_bruteforce_df(qs, pts).collect())
     assert fast == slow
     assert len(fast) > 50  # non-trivial fixture
 
@@ -123,10 +125,10 @@ def test_dwithin_near_pole_unbounded_block(spark):
     qs = spark.createDataFrame(
         pd.DataFrame({"qid": [0, 1], "lat": [84.9, -84.9],
                       "lon": [0.0, 179.9], "radius_m": [4e6, 6e6]}))
-    fast = {(r.qid, r.image_id) for r in
-            dwithin_join(qs, pts, level=6).collect()}
-    slow = {(r.qid, r.image_id) for r in
-            dwithin_bruteforce_df(qs, pts).collect()}
+    fast = sorted((r.qid, r.image_id) for r in
+                  dwithin_join(qs, pts, level=6).collect())
+    slow = sorted((r.qid, r.image_id) for r in
+                  dwithin_bruteforce_df(qs, pts).collect())
     assert fast == slow and len(fast) > 0
 
 

@@ -139,34 +139,86 @@ def test_cell_encode_native_has_zero_python_stages(spark, images_parquet):
     assert "*(" in plan  # stays inside whole-stage codegen
 
 
-def test_cell_encode_udf_form_is_single_arrow_batch_stage(spark, images_parquet):
-    df = with_cell(
-        spark.read.parquet(images_parquet).select("image_id", "lat", "lon"),
-        native=False)
-    plan = plan_of(df, "simple")
-    assert plan.count("ArrowEvalPython") == 1
-    assert "BatchEvalPython" not in plan
-
-
 def test_native_and_udf_cell_encode_agree(spark, images_parquet):
+    from oracle import geo as og
     src = spark.read.parquet(images_parquet).select("image_id", "lat", "lon")
-    a = {r["image_id"]: r["cell"] for r in with_cell(src).collect()}
-    b = {r["image_id"]: r["cell"]
-         for r in with_cell(src, native=False).collect()}
-    assert a == b
+    rows = with_cell(src).collect()
+    assert len(rows) == 200
+    for r in rows:
+        assert r["cell"] == og.cell_encode(r["lon"], r["lat"]), r
 
 
 def test_native_and_udf_tiles_agree(spark, images_parquet):
     from engine.geo.tiles import with_tile
+    from oracle import geo as og
     src = with_cell(
         spark.read.parquet(images_parquet).select("image_id", "lat", "lon"))
-    cols = ("image_id", "tile_x", "tile_y", "quadkey")
-    a = sorted(tuple(r[c] for c in cols)
-               for r in with_tile(src, z=12, quadkey_col=True).collect())
-    b = sorted(tuple(r[c] for c in cols)
-               for r in with_tile(src, z=12, quadkey_col=True,
-                                  native=False).collect())
-    assert a == b
+    rows = with_tile(src, z=12, quadkey_col=True).collect()
+    assert len(rows) == 200
+    for r in rows:
+        _, tx, ty = og.tile(r["lon"], r["lat"], 12)
+        assert (r["tile_z"], r["tile_x"], r["tile_y"]) == (12, tx, ty), r
+        assert r["quadkey"] == og.quadkey(12, tx, ty)
+
+
+def _plan_nodes(node):
+    """Physical plan nodes under `node`, depth first; adaptive plans are
+    read at their current form, descending through each query stage."""
+    name = node.getClass().getSimpleName()
+    if name == "AdaptiveSparkPlanExec":
+        yield from _plan_nodes(node.executedPlan())
+        return
+    if name.endswith("QueryStageExec"):
+        yield from _plan_nodes(node.plan())
+        return
+    yield node
+    it = node.children().iterator()
+    while it.hasNext():
+        yield from _plan_nodes(it.next())
+
+
+def test_knn_round_query_side_is_native_broadcast_build(
+        spark, images_parquet, monkeypatch):
+    """One knn_join round's candidate join: the disk explode of the
+    query side runs with no Python worker, and with the query side the
+    smaller input it stays the broadcast (build) side, so the point
+    table is never shuffled for the join."""
+    import engine.geo.knn as knn
+    rounds = []
+    real = knn.materialize
+
+    def spy(df, *a, **kw):
+        if "rn" in df.columns:
+            rounds.append(df)
+        return real(df, *a, **kw)
+
+    monkeypatch.setattr(knn, "materialize", spy)
+    # spark.range gives the query side a known (small) size estimate
+    queries = spark.range(4).select(
+        F.col("id").alias("qid"), (F.col("id") * 20.0 - 30.0).alias("lat"),
+        (F.col("id") * 80.0 - 150.0).alias("lon"))
+    pts = spark.read.parquet(images_parquet).select("image_id", "lat", "lon")
+    knn.knn_join(queries, pts, k=3, level=3, r0=1)
+    plan = rounds[0]._jdf.queryExecution().executedPlan()
+    names = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
+    assert not any("EvalPython" in n for n in names), names
+    join = next(n for n in _plan_nodes(plan)
+                if n.getClass().getSimpleName() == "BroadcastHashJoinExec")
+    build, probe = ((join.left(), join.right())
+                    if join.buildSide().toString() == "BuildLeft"
+                    else (join.right(), join.left()))
+    build_names = [n.getClass().getSimpleName() for n in _plan_nodes(build)]
+    probe_names = [n.getClass().getSimpleName() for n in _plan_nodes(probe)]
+    assert "GenerateExec" in build_names, build_names
+    assert "FileSourceScanExec" in probe_names, probe_names
+
+
+def test_cell_ring_has_no_python_node(spark, sf_dir):
+    import __spark_entry__ as m
+    df = m.queries()["cell_ring"](spark, sf_dir)
+    plan = plan_of(df, "simple")
+    assert "Python" not in plan, plan
+    assert "Generate explode" in plan
 
 
 def test_near_dup_lsh_path_is_equi_join_not_nested_loop(spark):

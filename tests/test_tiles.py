@@ -10,40 +10,51 @@ from engine.geo import tiles as et
 from oracle import geo as og
 
 
-def test_tile_xy_matches_oracle():
+def test_tile_xy_matches_oracle(spark):
     r = np.random.default_rng(5)
     lon = r.uniform(-180, 180, 400)
     lat = r.uniform(-85.05, 85.05, 400)
-    c = ec.cell_encode_np(lon, lat)
+    df = ec.with_cell(spark.createDataFrame(pd.DataFrame(
+        {"i": np.arange(len(lon)), "lon": lon, "lat": lat})))
     for z in (0, 1, 5, 12, 18):
-        tx, ty = et.tile_xy_from_cell_np(c, z)
-        for i in range(len(lon)):
-            wz, wx, wy = og.tile(lon[i], lat[i], z)
-            assert (tx[i], ty[i]) == (wx, wy), (lon[i], lat[i], z)
+        rows = et.with_tile(df, z).orderBy("i").collect()
+        for i, row in enumerate(rows):
+            assert (row.tile_z, row.tile_x, row.tile_y) == \
+                og.tile(lon[i], lat[i], z), (lon[i], lat[i], z)
 
 
-def test_quadkey_matches_oracle():
+def test_quadkey_matches_oracle(spark):
     r = np.random.default_rng(6)
     for z in (1, 7, 12):
         x = r.integers(0, 1 << z, 100).astype(np.int64)
         y = r.integers(0, 1 << z, 100).astype(np.int64)
-        got = et.quadkey_np(x, y, z)
-        for i in range(len(x)):
-            assert got[i] == og.quadkey(z, int(x[i]), int(y[i]))
-            assert len(got[i]) == z
+        # any level-30 cell inside tile (x, y): the tile's Morton id
+        # shifted down to level 30
+        cells = [og.morton(int(a), int(b), z) << 2 * (30 - z)
+                 for a, b in zip(x, y)]
+        df = spark.createDataFrame([(i, c) for i, c in enumerate(cells)],
+                                   "i long, cell long")
+        rows = et.with_tile(df, z, quadkey_col=True).orderBy("i").collect()
+        for i, row in enumerate(rows):
+            assert (row.tile_x, row.tile_y) == (x[i], y[i])
+            assert row.quadkey == og.quadkey(z, int(x[i]), int(y[i]))
+            assert len(row.quadkey) == z
 
 
-def test_tile_key_equals_cell_parent():
+def test_tile_key_equals_cell_parent(spark):
     # tile Morton id == cell parent at z — the native no-UDF grouping key
     r = np.random.default_rng(8)
     lon = r.uniform(-180, 180, 200)
     lat = r.uniform(-85, 85, 200)
-    c = ec.cell_encode_np(lon, lat)
+    df = ec.with_cell(spark.createDataFrame(
+        pd.DataFrame({"lon": lon, "lat": lat})))
     for z in (4, 9, 14):
-        tx, ty = et.tile_xy_from_cell_np(c, z)
-        want = ec.morton_np(tx, ty)
-        got = c >> np.int64(2 * (30 - z))
-        np.testing.assert_array_equal(got, want)
+        rows = et.with_tile(df, z).select(
+            "tile_x", "tile_y", et.tile_key_col("cell", z).alias("tk"),
+            "cell").collect()
+        for row in rows:
+            assert row.tk == og.morton(row.tile_x, row.tile_y, z)
+            assert row.tk == og.cell_parent(row.cell, z)
 
 
 def test_with_tile_spark(spark):

@@ -115,9 +115,9 @@ def main() -> None:
     # 5. kNN candidate join (one expansion round, as built in knn_join)
     from pyspark.sql import Window
     from engine.geo.dist import haversine_expr
-    from engine.geo.knn import make_disk_r_udf
-    queries = spark.createDataFrame(
-        [(0, 48.85, 2.3), (1, -33.9, 151.2)], "qid long, lat double, lon double")
+    from engine.geo.cells import explode_disk
+    queries = spark.sql("SELECT * FROM VALUES (0L, 48.85D, 2.3D), "
+                        "(1L, -33.9D, 151.2D) AS t(qid, lat, lon)")
     pts = with_cell(spark.read.parquet(path).select("image_id", "lat", "lon")) \
         .withColumn("cell_p", cell_parent_col("cell", 8)) \
         .select("image_id", F.col("lat").alias("p_lat"),
@@ -125,8 +125,7 @@ def main() -> None:
     q = with_cell(queries).select(
         "qid", "lat", "lon", cell_parent_col("cell", 8).alias("q_cell")) \
         .withColumn("r", F.lit(3))
-    cand_cells = q.withColumn(
-        "cell_p", F.explode(make_disk_r_udf(8)(F.col("q_cell"), F.col("r"))))
+    cand_cells = explode_disk(q, 8, "r", "q_cell", "cell_p")
     scored = cand_cells.join(pts, "cell_p").withColumn(
         "dist_m", haversine_expr(F.col("lon"), F.col("lat"),
                                  F.col("p_lon"), F.col("p_lat")))
@@ -135,9 +134,13 @@ def main() -> None:
         .filter(F.col("rn") <= 10)
     sections.append((
         "kNN candidate round (D10/F4)",
-        "Per round: the (small) query side explodes its ring disk and the "
+        "Per round: the (small) query side explodes its ring disk natively "
+        "(bounded sequences and Morton cascades, no Python worker) and the "
         "join on the level-8 cell key broadcasts it — the big point table "
-        "is never shuffled; scoring is the native JVM haversine inside "
+        "is never shuffled. The planner needs the query side's size for "
+        "this: here it is a VALUES list; a createDataFrame of Python rows "
+        "has no size estimate, and then the point side is broadcast instead. "
+        "Scoring is the native JVM haversine inside "
         "codegen; per-query top-k is a window over candidates only. The "
         "safe-radius retry loop (engine/geo/knn.py) re-runs only failing "
         "qids and localCheckpoints each round's top-k so the candidate "
