@@ -6,12 +6,16 @@ Shapely/GEOS PIP refinement".
 
 Plan shape (scale rationale, SURVEY.md §4):
   probe:  images -> native `shiftright` cell prefix (no UDF, codegen)
-  build:  polygon covering exploded to (cell_p, poly_id, full) rows
+  build:  polygon covering as (cell_p, poly_id, full, edges) rows, a
+          driver-side LocalRelation (no Python worker when it runs)
   join:   BROADCAST when the covering is small (almost always — it is
           bounded by the planner's cell budget), else SHUFFLE_HASH with
           both sides repartitioned on cell_p; explicit hot-cell salting
           is layered on by engine/geo/skew.py.
-  refine: exact PIP via mapInPandas; `full` covering cells bypass it.
+  refine: exact PIP as a native even-odd expression over each partial
+          cell's edges (engine/geo/pip.py::refine_native, the default);
+          `refine_mode="pandas"` runs the numpy reference instead.
+          `full` covering cells bypass it.
 
 The bytes column (image payload) must be pruned *before* this join —
 callers select narrow columns; tests/test_plans.py asserts the scan's

@@ -147,7 +147,11 @@ def knn_join(queries: DataFrame, points: DataFrame, k: int, level: int,
     tiebreak).  Returns (qid, image_id, dist_m, rn).
 
     `queries` needs (qid, lat, lon); `points` needs (id, lat, lon) and
-    reuses a `cell` column if present.
+    reuses a `cell` column if present.  Build driver-side queries with
+    `engine.localdf.local_df`: a LocalRelation has a size the planner
+    reads, so each round broadcasts the exploded query side against the
+    point table.  A `createDataFrame` of Python rows has none, and above
+    `autoBroadcastJoinThreshold` every round shuffles the point table.
 
     Candidates are scored with the JVM-trig haversine (codegen).
     `cache_points=True` persists the narrow prepared points side so

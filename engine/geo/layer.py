@@ -27,6 +27,7 @@ from pyspark.sql.types import (
     StructField, StructType,
 )
 
+from engine.localdf import local_df
 from oracle.geo import mercx, mercy, morton, point_in_polygon
 
 LAYER12_PATH = "/root/repo/oracle/layer12.json"
@@ -267,10 +268,14 @@ class PolygonLayer:
         expression (engine/geo/pip.py::refine_native) — the whole
         spatial join then stays inside whole-stage codegen.  Full cells
         carry no edges (they bypass the test), so the broadcast grows
-        only by O(boundary cells x polygon edges)."""
+        only by O(boundary cells x polygon edges).
+
+        The covering is a LocalRelation (engine/localdf.py): running or
+        broadcasting it starts no Python worker, and the planner knows
+        its size."""
         if not with_edges:
             rows = self.covering(level)
-            return spark.createDataFrame(rows, schema=BUILD_SCHEMA)
+            return local_df(spark, rows, BUILD_SCHEMA)
         seen: dict[tuple[int, str], dict] = {}
         for p in self.polygons:
             for ring, holes in p.split_antimeridian():
@@ -290,7 +295,7 @@ class PolygonLayer:
             (cell, pid, e["full"], None if e["full"] else e["edges"])
             for (cell, pid), e in seen.items()
         )
-        return spark.createDataFrame(rows, schema=BUILD_EDGES_SCHEMA)
+        return local_df(spark, rows, BUILD_EDGES_SCHEMA)
 
     def build_df_compact(self, spark: SparkSession, level: int,
                          min_level: int, with_edges: bool = True):
@@ -347,7 +352,7 @@ class PolygonLayer:
             rows = [r[:4] for r in rows]
             schema = StructType(schema.fields[:4])
         levels = sorted({r[0] for r in rows})
-        return spark.createDataFrame(rows, schema=schema), levels
+        return local_df(spark, rows, schema), levels
 
     def to_df(self, spark: SparkSession, level: int) -> DataFrame:
         """Full layer inventory DF per SURVEY.md §1.2 schema."""
@@ -361,7 +366,7 @@ class PolygonLayer:
                 list(_ring_bbox(p.ring)),
                 cells,
             ))
-        return spark.createDataFrame(rows, schema=LAYER_SCHEMA)
+        return local_df(spark, rows, LAYER_SCHEMA)
 
 
 def rect_polygon(poly_id: str, minlon: float, minlat: float,

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from engine.localdf import local_df
+
 RING_SCHEMA = ("poly_id string, ring_id string, kind string, "
                "verts array<struct<lon: double, lat: double>>")
 
@@ -48,7 +50,7 @@ def rings_df(layer, spark: SparkSession) -> DataFrame:
             for h_idx, h in enumerate(holes):
                 rows.append((p.poly_id, f"{rid}:hole{h_idx}", "hole",
                              [(float(x), float(y)) for x, y in h]))
-    return spark.createDataFrame(rows, schema=RING_SCHEMA)
+    return local_df(spark, rows, RING_SCHEMA)
 
 
 def _quant(q_scale: str) -> str:

@@ -51,6 +51,8 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 
+from engine.localdf import local_df
+
 GRANULARITY = 100  # nanodegrees per stored unit (the format default)
 
 # ------------------------------------------------------- wire format
@@ -452,8 +454,8 @@ def _work_items(spark, paths: list[str]):
     items = [(p, off, size) for path in paths
              for p, off, size, btype in blob_index(path)
              if btype == "OSMData"]
-    return spark.createDataFrame(
-        items, "path string, off long, size long").repartition(
+    return local_df(
+        spark, items, "path string, off long, size long").repartition(
         min(len(items), 4 * spark.sparkContext.defaultParallelism) or 1)
 
 

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from engine.geo.layer import Polygon, PolygonLayer
+from engine.localdf import local_df
 
 _DBF_FIELDS = (("poly_id", 32), ("name", 32))
 
@@ -223,7 +224,8 @@ def read_shapefile(spark: SparkSession, base: str,
               hsize + rsize * i)
              for i in range(len(idx))]
     chunks = [items[i:i + chunk] for i in range(0, len(items), chunk)]
-    work = spark.createDataFrame(
+    work = local_df(
+        spark,
         [(c[0][0], c[0][1], [list(map(int, t[2:])) for t in c])
          for c in chunks],
         "shp string, dbf string, recs array<array<long>>")

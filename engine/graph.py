@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import StructField, StructType
 
 from engine.ckpt import materialize
+from engine.localdf import local_df
 
 S0_DEFAULT = 1 << 30
 DAMP_NUM, DAMP_DEN = 85, 100
@@ -505,8 +506,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
         id_type = edges.schema["src"].dataType
         schema = StructType([StructField("id", id_type),
                              StructField("cluster_id", id_type)])
-        return F.broadcast(edges.sparkSession.createDataFrame(
-            list(labels.items()), schema))
+        return F.broadcast(local_df(
+            edges.sparkSession, list(labels.items()), schema))
     labels = materialize(
         edges.select(F.col("src").alias("id")).distinct()
              .withColumn("label", F.col("id")),

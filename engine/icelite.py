@@ -46,6 +46,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from engine.localdf import arrow_rows, local_df
+
 # java.net.URI path characters besides letters, digits and _.-~
 _URI_PATH_SAFE = "/!$&'()*+,;=:@"
 
@@ -432,19 +434,10 @@ class IceliteTable:
         DataFrames go through `commit_append`.  Every row first passes
         the check `createDataFrame` applies (width, a None in a
         non-nullable field, value types), so a bad row raises before
-        anything is written — pyarrow alone would truncate a float into
-        a long field."""
-        import pyarrow as pa
+        anything is written (engine/localdf.py::arrow_rows)."""
         import pyarrow.parquet as pq
-        from pyspark.sql.pandas.types import to_arrow_schema
-        from pyspark.sql.types import _make_type_verifier
 
-        verify = _make_type_verifier(schema)
-        for row in rows:
-            verify(row)
-        table = pa.Table.from_pylist(
-            [dict(zip(schema.names, row)) for row in rows],
-            schema=to_arrow_schema(schema))
+        table = arrow_rows(rows, schema)
         rel_commit = self._new_commit_dir()
         os.makedirs(os.path.join(self.root, rel_commit))
         rel = f"{rel_commit}/part-00000.parquet"
@@ -469,9 +462,10 @@ class IceliteTable:
     # (table.files / table.history / table.snapshots); these are the
     # icelite equivalents.  Both are METADATA-ONLY: they read the
     # snapshot log + manifests, never a data file — bounded by the
-    # file/snapshot count (the metrics_table class), so createDataFrame
-    # over the driver-side list is the right plan at any table size
-    # where manifests themselves fit (Iceberg's own design point).
+    # file/snapshot count (the metrics_table class), so a LocalRelation
+    # of the driver-side rows (engine/localdf.py) is the right plan at
+    # any table size where manifests themselves fit (Iceberg's own
+    # design point).
 
     def files_table(self, spark: SparkSession,
                     stat_cols: tuple[str, ...] = ()) -> DataFrame:
@@ -506,7 +500,7 @@ class IceliteTable:
         for c in stat_cols:
             fields.append(StructField(f"min_{c}", LongType(), True))
             fields.append(StructField(f"max_{c}", LongType(), True))
-        return spark.createDataFrame(rows, StructType(fields))
+        return local_df(spark, rows, StructType(fields))
 
     def history_table(self, spark: SparkSession) -> DataFrame:
         """The `history`/`snapshots` metadata relation: the ordered
@@ -531,7 +525,7 @@ class IceliteTable:
             StructField("branch", StringType(), False),
             StructField("n_files", IntegerType(), False),
             StructField("n_added", IntegerType(), False)])
-        return spark.createDataFrame(rows, schema)
+        return local_df(spark, rows, schema)
 
     def compact(self, spark: SparkSession, target_files: int = 4) -> int:
         """Small-file compaction: rewrite the CURRENT view into
@@ -660,7 +654,7 @@ class IceliteTable:
             raise FileNotFoundError(f"icelite table has no snapshots: {self.root}")
         files = self.files(sid)
         if not files:
-            return spark.createDataFrame([], self.schema(sid))
+            return local_df(spark, [], self.schema(sid))
         return spark.read.schema(self.schema(sid)).parquet(*files)
 
     def scan_pruned(self, spark: SparkSession, col: str,
@@ -695,7 +689,7 @@ class IceliteTable:
                 keep.append(os.path.join(self.root, rel))
         schema = self.schema(sid)
         if not keep:
-            df = spark.createDataFrame([], schema)
+            df = local_df(spark, [], schema)
         else:
             df = spark.read.schema(schema).parquet(*keep)
         df = df.filter((F.col(col) >= lo) & (F.col(col) <= hi))
@@ -705,7 +699,7 @@ class IceliteTable:
         """Incremental read: only rows appended by `snapshot_id`."""
         files = self.added_files(snapshot_id)
         if not files:
-            return spark.createDataFrame([], self.schema(snapshot_id))
+            return local_df(spark, [], self.schema(snapshot_id))
         return spark.read.parquet(*files)
 
     def added_file_rows(self, spark: SparkSession,
@@ -776,7 +770,7 @@ class IceliteTable:
             out = part if out is None else out.unionByName(part)
         if out is None:
             sch = self.schema(to_sid).add("commit_seq", "integer")                                      .add("snapshot_id", "long")
-            return spark.createDataFrame([], sch)
+            return local_df(spark, [], sch)
         return out
 
     def diff(self, spark: SparkSession, from_sid: int, to_sid: int) -> DataFrame:
@@ -789,5 +783,5 @@ class IceliteTable:
         b = self._manifest(to_sid)["files"]
         new = [os.path.join(self.root, p) for p in b if p not in a]
         if not new:
-            return spark.createDataFrame([], self.schema(to_sid))
+            return local_df(spark, [], self.schema(to_sid))
         return spark.read.parquet(*new)

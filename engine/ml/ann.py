@@ -21,6 +21,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, LongType
 
+from engine.localdf import local_df
+
 
 def _dot_expr(vec_col: str, qlit: str) -> str:
     return (
@@ -400,7 +402,7 @@ def ivf_batch_topk(corpus: DataFrame, queries: DataFrame, k: int,
         for c in np.argsort(-(cents @ q))[:n_probe].tolist():
             probes.append((r.qid, int(c)))
     spark = corpus.sparkSession
-    probe_df = spark.createDataFrame(probes, "qid long, ivf_cell long")
+    probe_df = local_df(spark, probes, "qid long, ivf_cell long")
     qdf = queries.select(F.col(qid_col).alias("qid"),
                          F.col(vec_col).alias("_qv"))
     assigned = corpus.withColumn(

@@ -31,6 +31,8 @@ from typing import Iterable, Sequence
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from engine.localdf import local_df
+
 END = ""  # end-of-word marker; never occurs in corpus text
 
 _FNV_OFF = 2166136261
@@ -245,5 +247,5 @@ def bpe_train_dist(docs: DataFrame, n_merges: int = 40,
                                    "syms array<string>, n long")
                  .localCheckpoint(eager=False))
 
-    return spark.createDataFrame(
-        out, "rank int, left string, right string, pair_count long")
+    return local_df(
+        spark, out, "rank int, left string, right string, pair_count long")

@@ -25,11 +25,11 @@ def main(argv: list[str] | None = None) -> None:
     args = ap.parse_args(argv)
 
     import numpy as np
-    import pandas as pd
 
     from engine.session import get_spark
     from engine.geo.knn import knn_join
     from engine.icelite import IceliteTable
+    from engine.localdf import local_df
     from engine.planner import choose_knn_level
 
     spark = get_spark(app="geotile-knn")
@@ -37,11 +37,11 @@ def main(argv: list[str] | None = None) -> None:
     n_pts = pts.count()
     level = args.level or choose_knn_level(n_pts, args.k)
     r = np.random.default_rng(args.seed)
-    qs = spark.createDataFrame(pd.DataFrame({
-        "qid": np.arange(args.n_queries, dtype=np.int64),
-        "lon": r.uniform(-180, 180, args.n_queries),
-        "lat": r.uniform(-85, 85, args.n_queries),
-    }))
+    qs = local_df(spark, list(zip(
+        range(args.n_queries),
+        r.uniform(-180, 180, args.n_queries).tolist(),
+        r.uniform(-85, 85, args.n_queries).tolist())),
+        "qid long, lon double, lat double")
     out = knn_join(qs, pts, k=args.k, level=level)
     print(json.dumps({"result_rows": out.count(), "level": level}))
 

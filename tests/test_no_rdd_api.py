@@ -5,6 +5,11 @@
   the same constraint SURVEY §4 cites for cluster portability — and
   every former use (emptiness probes in iterative operators) has a
   DataFrame form (`df.isEmpty()`).
+* No implicit RDD either: `spark.createDataFrame(<list>)` plans a
+  ParallelCollectionRDD -> PythonRDD whose every execution starts Python
+  workers.  In `engine/` and `jobs/` driver-side rows go through
+  `engine/localdf.py::local_df` (an Arrow LocalRelation), the one module
+  that calls `createDataFrame`.
 * Bounded driver materialization: every `.collect()` / `.toPandas()` in
   `engine/` and `jobs/` must be listed in COLLECT_SITES with the reason
   its result is bounded.  A new site fails until it is reviewed here.
@@ -48,7 +53,30 @@ def test_engine_is_rdd_free():
                                  f"{line.strip()}")
     assert not offenders, (
         "RDD API use found (use DataFrame.isEmpty()/limit(1) probes, "
-        "spark.range/createDataFrame sources):\n" + "\n".join(offenders))
+        "spark.range or engine.localdf.local_df sources):\n"
+        + "\n".join(offenders))
+
+
+LOCAL_DF_MODULE = "engine/localdf.py"
+
+
+def test_driver_rows_go_through_local_df():
+    offenders = []
+    for d in ("engine", "jobs"):
+        for path in sorted((REPO / d).rglob("*.py")):
+            rel = path.relative_to(REPO).as_posix()
+            if rel == LOCAL_DF_MODULE:
+                continue
+            for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+                if (isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr == "createDataFrame"):
+                    offenders.append(f"{rel}:{node.lineno}")
+    assert not offenders, (
+        "createDataFrame outside engine/localdf.py (a list argument is a "
+        "PythonRDD that starts Python workers on every execution; build "
+        "driver-side rows with engine.localdf.local_df):\n"
+        + "\n".join(offenders))
 
 
 # (file, enclosing function) -> one reason per collect/toPandas site, in

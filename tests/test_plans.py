@@ -177,12 +177,8 @@ def _plan_nodes(node):
         yield from _plan_nodes(it.next())
 
 
-def test_knn_round_query_side_is_native_broadcast_build(
-        spark, images_parquet, monkeypatch):
-    """One knn_join round's candidate join: the disk explode of the
-    query side runs with no Python worker, and with the query side the
-    smaller input it stays the broadcast (build) side, so the point
-    table is never shuffled for the join."""
+def _first_knn_round_plan(monkeypatch, queries, points):
+    """The executed plan of the first knn_join round's top-k frame."""
     import engine.geo.knn as knn
     rounds = []
     real = knn.materialize
@@ -193,13 +189,22 @@ def test_knn_round_query_side_is_native_broadcast_build(
         return real(df, *a, **kw)
 
     monkeypatch.setattr(knn, "materialize", spy)
+    knn.knn_join(queries, points, k=3, level=3, r0=1)
+    return rounds[0]._jdf.queryExecution().executedPlan()
+
+
+def test_knn_round_query_side_is_native_broadcast_build(
+        spark, images_parquet, monkeypatch):
+    """One knn_join round's candidate join: the disk explode of the
+    query side runs with no Python worker, and with the query side the
+    smaller input it stays the broadcast (build) side, so the point
+    table is never shuffled for the join."""
     # spark.range gives the query side a known (small) size estimate
     queries = spark.range(4).select(
         F.col("id").alias("qid"), (F.col("id") * 20.0 - 30.0).alias("lat"),
         (F.col("id") * 80.0 - 150.0).alias("lon"))
     pts = spark.read.parquet(images_parquet).select("image_id", "lat", "lon")
-    knn.knn_join(queries, pts, k=3, level=3, r0=1)
-    plan = rounds[0]._jdf.queryExecution().executedPlan()
+    plan = _first_knn_round_plan(monkeypatch, queries, pts)
     names = [n.getClass().getSimpleName() for n in _plan_nodes(plan)]
     assert not any("EvalPython" in n for n in names), names
     join = next(n for n in _plan_nodes(plan)
@@ -211,6 +216,35 @@ def test_knn_round_query_side_is_native_broadcast_build(
     probe_names = [n.getClass().getSimpleName() for n in _plan_nodes(probe)]
     assert "GenerateExec" in build_names, build_names
     assert "FileSourceScanExec" in probe_names, probe_names
+
+
+@pytest.mark.parametrize("source, shuffles_points", [
+    ("local_df", False), ("python_rows", True)])
+def test_knn_round_with_driver_queries_does_not_shuffle_points(
+        spark, images_parquet, monkeypatch, source, shuffles_points):
+    """Driver-side queries built with local_df are a LocalRelation with a
+    size estimate, so with the point table above the broadcast threshold
+    a knn_join round still broadcasts the exploded query side and never
+    shuffles the points on cell_p.  A createDataFrame of Python rows has
+    no estimate: the round plans a SortMergeJoin, and the exchange stays
+    in the final plan after AQE demotes it to a broadcast join."""
+    from engine.localdf import local_df
+    rows = [(i, i * 20.0 - 30.0, i * 80.0 - 150.0) for i in range(4)]
+    schema = "qid long, lat double, lon double"
+    queries = (local_df(spark, rows, schema) if source == "local_df"
+               else spark.createDataFrame(rows, schema))
+    pts = spark.read.parquet(images_parquet).select("image_id", "lat", "lon")
+    before = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "4096")
+    try:
+        plan = _first_knn_round_plan(monkeypatch, queries, pts).toString()
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", before)
+    assert "isFinalPlan=true" in plan, plan
+    final = plan.split("== Initial Plan ==")[0]
+    assert ("Exchange hashpartitioning(cell_p" in final) == shuffles_points, \
+        plan
+    assert ("SortMergeJoin" in plan) == shuffles_points, plan
 
 
 def test_cell_ring_has_no_python_node(spark, sf_dir):
